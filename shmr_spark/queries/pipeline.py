@@ -735,9 +735,10 @@ def bucketed_join_roundtrip(spark, sf_dir):
 # DRIVER hash gate. pytest proves interop against the reference
 # binary; this query signs a full write->read round trip: orders
 # projected and written as shmr partition files in a scratch dir,
-# read back through the DataSource (one task per file), and the
-# re-aggregated per-status totals must hash-equal the plain-scan
-# oracle. Collected (<= 3 rows) before the scratch dir is removed.
+# read back through the DataSource (small files share a read task),
+# and the re-aggregated per-status totals must hash-equal the
+# plain-scan oracle. Collected (<= 3 rows) before the scratch dir is
+# removed.
 # --------------------------------------------------------------------------
 
 

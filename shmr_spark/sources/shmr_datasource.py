@@ -13,8 +13,10 @@ convention (ND-JSON default / CSV / raw text —
 
 This source maps that model onto Spark's:
 
-- one InputPartition per FILE — exactly the reference's unit of
-  parallelism (one xargs process per partition ≙ one Spark task);
+- small files share a read task, in sorted order, up to ``PACK_BYTES``
+  on disk (4 MiB, Spark's ``spark.sql.files.openCostInBytes`` default;
+  a file of 4 MiB or more reads alone): a Python task's fixed worker
+  set-up cost dwarfs decoding a small file;
 - codec/skip_nrows as read options; gz/bz2 resolved per file;
 - the writer emits one ``part-NNNNN.json[.gz]`` per Spark partition
   WITH the ``.meta`` sidecar, so output datasets are valid inputs for
@@ -42,7 +44,7 @@ Usage:
     df.write.format("shmr").option("codec", "json").save("/out")
     # incremental ingest of a growing partition directory:
     sdf = (spark.readStream.format("shmr").schema("a int, b string")
-           .load("/data/incoming"))   # one task per NEW file per batch
+           .load("/data/incoming"))   # NEW files per batch, packed
 """
 
 from __future__ import annotations
@@ -95,8 +97,33 @@ def _expand(path: str) -> list[str]:
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+    def __init__(self, paths: tuple[str, ...]):
+        self.paths = paths
+
+
+# Spark's spark.sql.files.openCostInBytes default. A constant, not a
+# conf or option: the planner worker calling partitions() has no
+# SparkSession to read one from.
+PACK_BYTES = 4 * 1024 * 1024
+
+
+def _pack(paths: list[str]) -> list[_FilePartition]:
+    """Group sorted files into read tasks, opening a new task only when
+    the next file would push the current one's on-disk bytes past
+    PACK_BYTES. Every task holds at least one file."""
+    tasks: list[_FilePartition] = []
+    cur: list[str] = []
+    size = 0
+    for p in paths:
+        n = os.path.getsize(p)
+        if cur and size + n > PACK_BYTES:
+            tasks.append(_FilePartition(tuple(cur)))
+            cur, size = [], 0
+        cur.append(p)
+        size += n
+    if cur:
+        tasks.append(_FilePartition(tuple(cur)))
+    return tasks
 
 
 def _caster(simple_type: str):
@@ -284,12 +311,14 @@ class ShmrReader(DataSourceReader):
         self._pushed = []  # evaluators applied in read()
 
     def partitions(self) -> Sequence[InputPartition]:
-        # one task per file — the reference's parallelism unit
-        return [_FilePartition(p) for p in self.paths]
+        # small files share a task (see PACK_BYTES)
+        return _pack(self.paths)
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        rows = _decode_file(
-            partition.path, self.schema_, self.codec, self.skip_nrows
+        rows = (
+            row
+            for path in partition.paths
+            for row in _decode_file(path, self.schema_, self.codec, self.skip_nrows)
         )
         if not self._pushed:
             yield from rows
@@ -330,8 +359,8 @@ class ShmrStreamReader(DataSourceStreamReader):
     """Incremental ingest of a GROWING reference partition directory —
     ``spark.readStream.format("shmr")`` turns the reference's batch
     file model into a Structured Streaming source: each micro-batch
-    picks up the partition files that appeared since the last one, one
-    Spark task per new file (the reference's parallelism unit), with
+    picks up the partition files that appeared since the last one,
+    packed into read tasks as the batch reader packs them, with
     exactly-once delivery through Spark's offset log.
 
     Offset design (O(1) state, not O(files)): the reference CLI names
@@ -361,12 +390,13 @@ class ShmrStreamReader(DataSourceStreamReader):
         if not any(c in pattern for c in "*?["):
             # directory → the reference's default dataset layout
             pattern = os.path.join(pattern, "*")
-        # .meta sidecars and in-progress temp files are not records
+        # .meta sidecars, _SUCCESS markers and in-progress temp files
+        # are not records (Spark's file sources skip "_"/"." names too)
         return sorted(
             p
             for p in globmod.glob(pattern)
             if not p.endswith(".meta")
-            and not os.path.basename(p).startswith(".")
+            and not os.path.basename(p).startswith(("_", "."))
             and os.path.isfile(p)
         )
 
@@ -415,12 +445,12 @@ class ShmrStreamReader(DataSourceStreamReader):
                 "already-planned range. Re-shard or rename the late "
                 "file(s), or restart from a fresh checkpoint."
             )
-        return [_FilePartition(p) for p in batch]
+        # atomic-rename arrival fixes file sizes, so a replay packs alike
+        return _pack(batch)
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        yield from _decode_file(
-            partition.path, self.schema_, self.codec, self.skip_nrows
-        )
+        for path in partition.paths:
+            yield from _decode_file(path, self.schema_, self.codec, self.skip_nrows)
 
     def commit(self, end: dict) -> None:
         pass
@@ -461,6 +491,7 @@ def _meta_path(datafile: str) -> str:
 class ShmrWriter(DataSourceWriter):
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         import glob as g
+        import time
         import uuid
 
         self.schema_ = schema
@@ -469,8 +500,9 @@ class ShmrWriter(DataSourceWriter):
         self.compression = options.get("compression", "")  # "", gz, bz2
         # per-job token: append jobs never collide with earlier output,
         # and two concurrent attempts of one task write distinct temp
-        # files (the final rename is atomic on a local FS)
-        self.token = uuid.uuid4().hex[:8]
+        # files (the final rename is atomic on a local FS); clock-first,
+        # so a later single-file append sorts after an earlier one
+        self.token = f"{time.time_ns():016x}{uuid.uuid4().hex[:4]}"
         if overwrite and os.path.isdir(self.path):
             # driver-side (this runs before any task): clear prior data
             for f in g.glob(os.path.join(self.path, "part-*")) + g.glob(

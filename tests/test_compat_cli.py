@@ -1,9 +1,10 @@
 """Compat-CLI tests: drive ``shmr_spark.compat.cli.main`` exactly the
 way the reference's tests drive its CLI (main(argv) calls), against
-(a) the reference's own people.csv fixture with the reference's golden
-values, and (b) synthetic ND-JSON partitions.
+(a) the synthetic ``people`` CSV fixture shaped like the reference's
+own (tests/fixtures/people, FIXTURES.md §A), and (b) synthetic ND-JSON
+partitions.
 
-Reference goldens (BASELINE.md): count(p0)=100, sum(age) p0=5047,
+Fixture goldens (FIXTURES.md §A): count(p0)=100, sum(age) p0=4903,
 map+sum ≡ reduce, split residue (age - i) % 5 == 0, coalesce(100, rpp
 50) = 2 files.
 """
@@ -17,14 +18,15 @@ import pytest
 
 from shmr_spark.compat.cli import main
 
-REF_RES = "/root/reference/tests/resources"
+REF_RES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "people")
+AGE_SUM_P0 = 4903  # sum(age) over people.00.csv, FIXTURES.md §A
 CSV_ARGS = [
     "--skip_nrows", "1",
     "-d", "shmr_spark.compat.funcs.csv_loads",
     "-s", "shmr_spark.compat.funcs.csv_dumps",
 ]
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="reference fixture absent"
+    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="people fixture absent"
 )
 
 
@@ -39,7 +41,7 @@ def test_count_partition0_golden(spark, tmp_path):
     assert out.read_text() == "100"
 
 
-def test_map_sum_golden_5047(spark, tmp_path):
+def test_map_sum_golden(spark, tmp_path):
     out = tmp_path / "ages.txt"
     _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
                  "-s", "shmr_spark.compat.funcs.str_dumps",
@@ -47,12 +49,12 @@ def test_map_sum_golden_5047(spark, tmp_path):
                  "--outfile", str(out)])
     ages = [int(x) for x in out.read_text().splitlines()]
     assert len(ages) == 100
-    assert sum(ages) == 5047
+    assert sum(ages) == AGE_SUM_P0
     # .meta sidecar parity
     assert json.loads((tmp_path / "ages.meta").read_text()) == {"n_records": 100}
 
 
-def test_reduce_golden_5047_and_crosscheck(spark, tmp_path):
+def test_reduce_golden_and_crosscheck(spark, tmp_path):
     out = tmp_path / "sum.json"
     # CSV deser in, JSON ser out: an int accumulator is not a CSV row
     # (the reference's own csv_dumps would reject it the same way)
@@ -60,7 +62,7 @@ def test_reduce_golden_5047_and_crosscheck(spark, tmp_path):
                  "-s", "shmr_spark.compat.funcs.json_dumps",
                  "partition.reduce", "--fn", "tests.cli_fixture_fns.sum_age",
                  "--outfile", str(out)])
-    assert json.loads(out.read_text().strip()) == 5047
+    assert json.loads(out.read_text().strip()) == AGE_SUM_P0
 
 
 def test_reduce_with_init_val(spark, tmp_path):
@@ -69,7 +71,7 @@ def test_reduce_with_init_val(spark, tmp_path):
                  "-s", "shmr_spark.compat.funcs.json_dumps",
                  "partition.reduce", "--fn", "tests.cli_fixture_fns.sum_age",
                  "--outfile", str(out), "--init_val", "100"])
-    assert json.loads(out.read_text().strip()) == 5147
+    assert json.loads(out.read_text().strip()) == AGE_SUM_P0 + 100
 
 
 def test_split_by_key_residue_golden(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Tests for the ``shmr`` Python DataSource (sources/shmr_datasource.py):
-read/write round trips, codec + compression handling, per-file task
-parallelism, .meta sidecars, and — the real interop claim — that its
-outputs are valid inputs for the REFERENCE CLI itself."""
+read/write round trips, codec + compression handling, packing of small
+files into shared read tasks, .meta sidecars, and — the real interop
+claim — that its outputs are valid inputs for the REFERENCE CLI
+itself."""
 
 from __future__ import annotations
 
@@ -11,9 +12,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from shmr_spark.sources.shmr_datasource import ShmrDataSource
+from shmr_spark.sources.shmr_datasource import (
+    PACK_BYTES,
+    ShmrDataSource,
+    ShmrReader,
+)
 
 REF_RES = "/root/reference/tests/resources"
+PEOPLE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "people")
 
 
 @pytest.fixture()
@@ -46,8 +52,70 @@ def test_json_roundtrip_with_meta(registered, tmp_path):
     )
     assert back.count() == 100
     assert back.agg(F.sum("id")).collect()[0][0] == 4950
-    # one Spark task per file — the reference's parallelism unit
-    assert back.rdd.getNumPartitions() == 4
+
+
+def _write_lines(path, recs) -> None:
+    with open(path, "w") as f:
+        for r in recs:
+            f.write(json.dumps(r) + "\n")
+
+
+def test_small_files_share_one_task_in_sorted_order(registered, tmp_path):
+    spark = registered
+    for i in (2, 0, 1):  # created out of order; the glob sorts them
+        _write_lines(tmp_path / f"part-{i:05d}.json", [{"x": i * 10 + j} for j in range(5)])
+    glob = str(tmp_path / "part-*.json")
+    tasks = ShmrReader(None, {"path": glob}).partitions()
+    assert [t.paths for t in tasks] == [
+        tuple(str(tmp_path / f"part-{i:05d}.json") for i in range(3))
+    ]
+    back = spark.read.format("shmr").schema("x bigint").load(glob)
+    assert back.rdd.getNumPartitions() == 1
+    # one task decodes its files in sorted order
+    assert [r.x for r in back.collect()] == [i * 10 + j for i in range(3) for j in range(5)]
+
+
+def test_file_of_pack_bytes_gets_its_own_task(registered, tmp_path):
+    spark = registered
+    _write_lines(tmp_path / "part-00000.json", [{"x": 0}])
+    # exactly PACK_BYTES: 65536 fixed-width lines of 64 bytes
+    with open(tmp_path / "part-00001.json", "w") as f:
+        for i in range(PACK_BYTES // 64):
+            f.write(json.dumps({"x": i, "pad": ""}).ljust(63) + "\n")
+    assert os.path.getsize(tmp_path / "part-00001.json") == PACK_BYTES
+    _write_lines(tmp_path / "part-00002.json", [{"x": 2}])
+    _write_lines(tmp_path / "part-00003.json", [{"x": 3}])
+    glob = str(tmp_path / "part-*.json")
+    tasks = ShmrReader(None, {"path": glob}).partitions()
+    assert [[os.path.basename(p) for p in t.paths] for t in tasks] == [
+        ["part-00000.json"],
+        ["part-00001.json"],
+        ["part-00002.json", "part-00003.json"],
+    ]
+    back = spark.read.format("shmr").schema("x bigint").load(glob)
+    assert back.rdd.getNumPartitions() == 3
+    assert back.count() == 3 + PACK_BYTES // 64
+
+
+def test_pushdown_over_packed_task_matches_plain_read(registered, tmp_path):
+    spark = registered
+    for i in range(4):
+        _write_lines(
+            tmp_path / f"part-{i:05d}.json",
+            [{"x": i * 10 + j, "s": None if j == 2 else f"s{j}"} for j in range(6)],
+        )
+
+    def rd(push):
+        r = spark.read.format("shmr").schema("x bigint, s string")
+        if push:
+            r = r.option("pushdown", "true")
+        return r.load(str(tmp_path / "part-*.json"))
+
+    assert rd(True).rdd.getNumPartitions() == 1
+    for p in ["x > 12", "s IS NULL", "NOT (x IN (1, 21, 33))", "s LIKE 's1%'"]:
+        pushed = sorted(map(tuple, rd(True).filter(p).collect()), key=repr)
+        plain = sorted(map(tuple, rd(False).filter(p).collect()), key=repr)
+        assert pushed == plain and pushed, f"pushdown diverged on {p!r}"
 
 
 def test_json_schema_inference(registered, tmp_path):
@@ -65,19 +133,31 @@ def test_json_schema_inference(registered, tmp_path):
     }
 
 
-def test_csv_skip_nrows_reference_fixture(registered):
-    """Read the reference's own people fixture: header skipping and the
-    5047 age golden (BASELINE.md)."""
-    spark = registered
-    csv = (
+def _people(spark, path):
+    return (
         spark.read.format("shmr")
         .schema("full_name string, first string, last string, age string")
         .option("codec", "csv")
         .option("skip_nrows", "1")
-        .load(f"{REF_RES}/people.00.csv")
+        .load(path)
     )
+
+
+def test_csv_skip_nrows_reference_fixture(registered):
+    """Read the people fixture shaped like the reference's own: header
+    skipping and the age golden (FIXTURES.md §A)."""
+    csv = _people(registered, f"{PEOPLE}/people.00.csv")
     assert csv.count() == 100
-    assert csv.select(F.sum(F.col("age").cast("int"))).collect()[0][0] == 5047
+    assert csv.select(F.sum(F.col("age").cast("int"))).collect()[0][0] == 4903
+
+
+def test_csv_skip_nrows_per_file_in_packed_task(registered):
+    """All three partitions share one read task; each file's header
+    row is still skipped."""
+    csv = _people(registered, f"{PEOPLE}/people.*.csv")
+    assert csv.rdd.getNumPartitions() == 1
+    assert csv.count() == 300
+    assert csv.select(F.sum(F.col("age").cast("int"))).collect()[0][0] == 14911
 
 
 def test_gzip_roundtrip(registered, tmp_path):
@@ -369,6 +449,52 @@ def test_stream_reader_rejects_out_of_order_file(registered, tmp_path):
     finally:
         if q.isActive:
             q.stop()
+
+
+def test_stream_reader_skips_success_marker_across_appends(registered, tmp_path):
+    """A directory filled by shmr append writes holds a ``_SUCCESS``
+    marker next to the part files; the stream must read only the part
+    files, and a second append must stream in after the first."""
+    import time
+
+    spark = registered
+    d = str(tmp_path / "appended")
+
+    def _append(lo):
+        spark.range(lo, lo + 25).selectExpr("id").coalesce(1).write.format(
+            "shmr"
+        ).mode("append").save(d)
+
+    _append(0)
+    q = (
+        spark.readStream.format("shmr")
+        .schema("id bigint")
+        .load(d)
+        .writeStream.format("memory")
+        .queryName("shmr_stream_appends")
+        .outputMode("append")
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+
+    def _wait_for(n, timeout=30):
+        deadline = time.time() + timeout
+        while time.time() < deadline:
+            ids = [r.id for r in spark.sql("SELECT id FROM shmr_stream_appends").collect()]
+            if len(ids) >= n or not q.isActive:
+                return ids
+            time.sleep(0.3)
+        raise AssertionError(f"stream did not reach {n} rows in {timeout}s")
+
+    try:
+        ids = _wait_for(25)
+        assert None not in ids and sorted(ids) == list(range(25))
+        _append(25)
+        ids = _wait_for(50)
+        assert q.exception() is None
+        assert None not in ids and sorted(ids) == list(range(50))
+    finally:
+        q.stop()
 
 
 def test_stream_pipeline_checkpoint_restart_exactly_once(registered, tmp_path):
