@@ -428,9 +428,11 @@ def main() -> None:
                 extra_base[name] = min(extra_base.get(name, dt), dt)
 
         # release the sf0.1 pipeline's survivor cache before the 10x
-        # phase — slots are per-(session, corpus, params), so the
-        # base-corpus cache would otherwise sit in MEMORY_AND_DISK
-        # for the whole scaled pass with zero reuse
+        # phase: a pipeline call releases only its own (session,
+        # corpus, params) slot, so the base-corpus cache would
+        # otherwise sit in MEMORY_AND_DISK for the whole scaled pass
+        # with zero reuse. (Each repeat on one corpus releases the
+        # previous call's cache first, so every timed rep is cold.)
         from shmr_spark.operators.training_pipeline import clear_pipeline_caches
 
         clear_pipeline_caches()
@@ -468,10 +470,10 @@ def main() -> None:
         }
 
         def _extras_shuffle(d) -> dict[str, dict[str, int]] | None:
-            # pipeline_e2e caches survivors per corpus — a cache hit
-            # would record ~0 shuffle bytes for whichever scale ran
-            # second, making the base/sf1 ratio meaningless; both
-            # passes measure the cold plan
+            # a pipeline_e2e call releases its slot's previous cache
+            # before persisting, so both passes measure the cold plan;
+            # the clear also drops the other corpus's survivor cache
+            # for the duration of the pass
             clear_pipeline_caches()
             return _shuffle_pass(shuffle_extras, d)
 

@@ -15,7 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from shmr_spark.functions.vectors import dot, l2_norm
+from shmr_spark.functions.vectors import dot, l2_norm, sql_double_array
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
@@ -33,9 +33,8 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     form costs n_planes × (dim literal F.lit py4j round trips + the
     lambda machinery) PER CONSTRUCTION — measured as the bulk of
     knn_join_lsh_prod's 1.7-2.6 s warm build time at 8 planes × 64
-    dims. Semantics are bit-identical: repr() round-trips each plane
-    double exactly, and parsing that decimal literal then casting to
-    DOUBLE is correctly rounded to the same value F.lit() shipped;
+    dims. Semantics are bit-identical: the planes are rendered by
+    ``sql_double_array`` (exactly the doubles F.lit() ships), and the
     operand order in the dot fold is unchanged."""
     if isinstance(vec, str):
         # zero planes (the degenerate single-bucket oracle configs)
@@ -45,9 +44,8 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
             return F.lit(0).cast("long")
         terms = []
         for i, p in enumerate(planes):
-            arr = ",".join(f"CAST({x!r} AS DOUBLE)" for x in p)
             d = (
-                f"aggregate(zip_with(`{vec}`, array({arr}), "
+                f"aggregate(zip_with(`{vec}`, {sql_double_array(p)}, "
                 "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
                 "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
             )

@@ -17,20 +17,26 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def lit_double_array(vals) -> Column:
-    """Constant array<double> literal built as ONE parsed expression
-    string instead of ``F.array(*[F.lit(float(v)) ...])`` — each
-    F.lit is a py4j round trip, so a 64-dim probe vector costs ~65
-    driver calls per construction (the lsh_bucket/minhash plan-BUILD
-    lesson). Bit-identical values: repr() round-trips each double and
-    the decimal-literal→DOUBLE cast is correctly rounded to the same
-    value F.lit ships."""
+def sql_double_array(vals) -> str:
+    """SQL text of a constant array<double>, for expression strings
+    that would otherwise need ``F.array(*[F.lit(float(v)) ...])`` —
+    each F.lit is a py4j round trip, so a 64-dim vector costs ~65
+    driver calls per construction. Each element is
+    ``CAST('<repr>' AS DOUBLE)``, bit-identical to ``F.lit``: repr()
+    round-trips every double, and the quoted cast also parses
+    nan/inf/-inf and keeps the sign of -0.0 (a bare ``CAST(nan AS
+    DOUBLE)`` reads nan as a column name, and ``-0.0`` as a decimal
+    literal folds to 0.0)."""
     vals = list(vals)
     if not vals:
-        return F.expr("CAST(array() AS ARRAY<DOUBLE>)")
-    return F.expr(
-        "array(" + ",".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-    )
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    return "array(" + ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vals) + ")"
+
+
+def lit_double_array(vals) -> Column:
+    """Constant array<double> column of ``vals`` as ONE parsed
+    expression (see ``sql_double_array``)."""
+    return F.expr(sql_double_array(vals))
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

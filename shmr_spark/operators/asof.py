@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 def asof_join(
@@ -39,14 +40,25 @@ def asof_join(
     """As-of join left→right on key `on`, time columns left_ts/right_ts.
 
     right_cols: right payload columns to carry (default: all except
-    key+ts). tiebreak: right column ordering ties at equal right_ts
-    (latest wins); required for determinism if right_ts can repeat
-    within a key. direction: "backward" (latest right BEFORE the left
-    ts — the default) or "forward" (earliest right AFTER it, DuckDB's
+    key+ts). tiebreak: integral right column ordering ties at equal
+    right_ts (latest wins); required for determinism if right_ts can
+    repeat within a key. A NULL tiebreak sorts as Long.MAX
+    (9223372036854775807), so it ties with a real Long.MAX value at
+    the same key and ts. Raises TypeError for a non-integral tiebreak
+    column, which the long cast would truncate into ties. direction:
+    "backward" (latest right BEFORE the left ts — the default) or
+    "forward" (earliest right AFTER it, DuckDB's
     ``ASOF ... ON l.ts < r.ts``) — forward just flips the window's
     time scan, same single shuffle."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if tiebreak is not None:
+        tb_type = right.schema[tiebreak].dataType
+        if not isinstance(tb_type, IntegralType):
+            raise TypeError(
+                f"tiebreak column {tiebreak!r} must be an integral type, "
+                f"got {tb_type.simpleString()}"
+            )
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in (on, right_ts)]
 
@@ -67,11 +79,8 @@ def asof_join(
         *[F.col(c).alias(f"__l_{c}") for c in carry_cols],
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_cols],
     )
-    # NULL tiebreak values previously sorted last among same-ts rights
-    # (asc_nulls_last); Long.MAX keeps them there now that NULL means
-    # "left row". (A genuine tiebreak of exactly Long.MAX at the same
-    # key+ts as a NULL one would tie nondeterministically — the
-    # docstring already requires distinct tiebreaks for determinism.)
+    # NULL means "left row" in __tb, so a NULL right tiebreak becomes
+    # Long.MAX: it still sorts last among same-ts rights.
     tb = (
         F.coalesce(F.col(tiebreak).cast("long"), F.lit((1 << 63) - 1))
         if tiebreak is not None

@@ -11,25 +11,19 @@ this module composes them into the one flow a real corpus build runs,
 so the bench can time it end-to-end at scale and the tests can assert
 the cross-stage invariant chain (counts only shrink, survivors are
 near-dup-free, packing conserves tokens, shards are balanced). The
-composition introduces no new shuffles; its only driver-side action
-is one bounded aggregate over the persisted survivor projection (the
-token total and max doc id that size the pack/shard bucket widths —
-round 11 folded both into the one action; round 12 folded the
-quality-mode selection's per-bucket token totals into it too, so the
-budget cut's offsets ride the plan as a driver-built local relation
-instead of two extra per-action passes; round 13 gave the DSIR-mode
-auto-scaled cut the same treatment via a two-step action — min/max
-first, bucket totals grouped by the literal affine map second) —
-taken at the same materialization point a production build writes to
-storage.
+composition introduces no new shuffles. Its only driver-side actions
+are small bounded aggregates over the persisted survivors (token
+total, max doc id and per-bucket token totals), taken at the point a
+production build writes to storage: they size the pack/shard buckets
+and turn the budget cut into literals, so later actions do not re-run
+those sub-plans.
 """
 
 from __future__ import annotations
 
 import threading
-import warnings
 
-from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,43 +40,44 @@ from shmr_spark.operators.selection import (
     select_by_token_fraction_from_totals,
 )
 
-# Survivor caches from previous invocations, keyed by (session,
-# corpus, params) and REPLACED when the same invocation repeats (the
-# bench loop re-runs identical args in one session; without eviction
-# each repetition would leak a corpus-sized cache). Replacement is
-# PLAN-AWARE: Spark caches by canonicalized plan, so a same-args
-# repeat's frames alias the previous entries — those are retained
-# (unpersisting the old handle would drop the shared entry), and
-# only frames whose plan left the slot (a mode-specific frame like
-# the DSIR ranking) are actually unpersisted. Keying by the
-# full argument tuple means two concurrent pipelines over different
-# corpora/configs each keep their own live cache — call-order
-# clobbering (the round-5 advice finding) needed only ONE global
-# slot to go wrong. The residual hazard is two CONCURRENT calls with
-# identical arguments: the second evicts the first's cache and the
-# first recomputes (a perf hit, never wrong results) — repeated
-# identical invocations are assumed sequential, which is the bench's
-# actual pattern.
+# Frames persisted by the last call for each (application, corpus,
+# params) slot. A call releases its slot's previous frames before its
+# first persist(), so it never shares a live cache entry with frames
+# it will later unpersist, and a repeat always runs cold. Each frame
+# joins the slot as soon as it is persisted, so clear_pipeline_caches()
+# reaches every one of them, including those of a concurrent identical
+# call. Two such calls can release each other's cache: a recompute,
+# never wrong rows.
 _cache_slots: dict[tuple, tuple[DataFrame, ...]] = {}
 _cache_lock = threading.Lock()
 
 
+def _release(frames) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # the frame's session already stopped
+
+
+def _persist(slot: tuple, df: DataFrame) -> DataFrame:
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _cache_lock:
+        _cache_slots[slot] = _cache_slots.get(slot, ()) + (df,)
+    return df
+
+
 def clear_pipeline_caches() -> int:
-    """Unpersist and drop every cached survivor frame. Slots are only
-    replaced on same-args re-invocation, so a caller that sweeps
-    DIFFERENT configs/corpora in one session (the bench's base→10×
-    alternation) accumulates one corpus-sized MEMORY_AND_DISK cache
-    per distinct slot until it calls this between phases. Returns the
-    number of caches released."""
+    """Unpersist and drop every cached survivor frame. A slot is only
+    released when the same call repeats, so a caller that sweeps
+    different configs or corpora in one session holds one corpus-sized
+    MEMORY_AND_DISK cache per slot until it calls this. Returns the
+    number of slots released."""
     with _cache_lock:
         dropped = list(_cache_slots.values())
         _cache_slots.clear()
-    for slot_dfs in dropped:
-        for df in slot_dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # slot's session already stopped
+    for frames in dropped:
+        _release(frames)
     return len(dropped)
 
 
@@ -108,7 +103,9 @@ def training_pipeline(
     deduped projection is PERSISTED first — the production shape: the
     output of an expensive dedup stage is always materialized (there,
     written to storage; here, MEMORY_AND_DISK) before fan-out to
-    selection + stats, never recomputed per consumer.
+    selection + stats, never recomputed per consumer. The persisted
+    frames live until the next call with the same arguments or
+    ``clear_pipeline_caches()``.
 
     ``dsir_target`` (optional boolean Column over the documents
     columns, e.g. ``F.col("lang") == "en"``) switches the selection
@@ -129,6 +126,23 @@ def training_pipeline(
     in every mode — n_tokens counts tokens regardless of feature
     space.
     """
+    slot = (
+        # applicationId, not id(spark): CPython can reuse the id() of
+        # a stopped session. Persistence is context-level, so sessions
+        # on one context rightly share a slot.
+        spark.sparkContext.applicationId,
+        sf_dir,
+        budget_fraction,
+        neardup_threshold,
+        pack_budget,
+        n_shards,
+        # not dsir_target: both modes persist the same exact-dedup
+        # plan, which is one CacheManager entry, so one slot holds it
+    )
+    with _cache_lock:
+        prev = _cache_slots.pop(slot, ())
+    _release(prev)
+
     docs = load_table(spark, sf_dir, "documents")
 
     cleaned = (
@@ -160,164 +174,13 @@ def training_pipeline(
         & (F.col("dup_token_frac") <= 0.7)
     )
 
-    from pyspark import StorageLevel
-
-    # The exact-dedup output has TWO consumers (minhash banding and
+    # The exact-dedup output has two consumers (minhash banding and
     # the cluster-representative join), each of which would otherwise
-    # recompute clean→annotate→filter→dedup from the scan. Persist it
-    # — the same "materialize after an expensive dedup stage" shape as
-    # the survivor projection below (in production, a write to
-    # storage). Measured at sf0.1: 8.10 → 7.21 s end-to-end (round
-    # 11). Tracked in the cache slot so eviction follows the slot's
-    # plan-aware replacement rule below.
-    exact = dedup_exact_keep_first(kept, "text", "doc_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # recompute clean→annotate→filter→dedup from the scan.
+    exact = _persist(slot, dedup_exact_keep_first(kept, "text", "doc_id"))
     pairs = minhash_near_duplicates(exact, threshold=neardup_threshold)
     surv = dedup_keep_cluster_representative(exact, pairs)
-
-    slot = (
-        # applicationId, not id(spark): CPython can reuse an id()
-        # after a stopped session is collected, aliasing a dead
-        # session's slot; the app id is stable and unique per app
-        # (and persistence is context-level, so two sessions on one
-        # context sharing a slot is correct, not a collision).
-        spark.sparkContext.applicationId,
-        sf_dir,
-        budget_fraction,
-        neardup_threshold,
-        pack_budget,
-        n_shards,
-        # NOT keyed by dsir_target: Spark's CacheManager keys cached
-        # data by canonicalized PLAN, and exact/scored have identical
-        # plans in both modes — mode-separate slots would hold
-        # handles to the one shared cache entry, so evicting either
-        # slot would drop the other mode's live cache out from under
-        # it. One slot per (corpus, params); an alternating
-        # quality/DSIR sweep replaces it per call (recompute, never
-        # wrong results), same as any other changed-config sweep.
-    )
-    scored = surv.select("doc_id", "quality", "n_tokens").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if dsir_target is not None:
-        from shmr_spark.functions.dsir import dsir_logweights
-
-        # Score the PERSISTED exact-dedup frame (the last point with
-        # text that is materialized — scoring surv would recompute
-        # the whole minhash banding lineage); the join onto scored
-        # restricts weights to the near-dup survivors, and estimating
-        # the target/raw distributions over the exact-deduped pool is
-        # the paper's setting (DSIR runs pre-selection, not
-        # post-near-dup). Two selection-specific constraints
-        # (code-review findings, round 11):
-        # - the cut ranks by the PER-TOKEN mean log-weight, not the
-        #   raw sum: the sum grows with document length (unbounded
-        #   either sign), while the mean is bounded by
-        #   max |per-token term| ≤ ln(corpus_tokens + V) — ~32 at
-        #   10¹⁴ tokens (and the length-debiased ranking is what a
-        #   budget cut wants anyway: the raw sum double-counts
-        #   length, which the token-budget cut already charges for).
-        #   The score is bucketed AUTO-SCALED (round-12 advice
-        #   finding): dsir_score concentrates near 0 (|score| < 0.23
-        #   measured at sf0.1), so a static floor(score·K) against
-        #   the ±32 worst-case bound populated only a handful of
-        #   buckets and the per-bucket cumulative window ran large
-        #   corpus fractions in single tasks. The affine map from the
-        #   observed min/max into [0, 1024) buckets keeps the
-        #   populated-bucket count tracking the observed spread at
-        #   any corpus size while the offsets relation stays ≤ 1024
-        #   rows (output unchanged — the prefix sum is exact under
-        #   any order-preserving bucketing, asserted in tests);
-        # - the ranked frame is PERSISTED before the cut: the
-        #   pack/quality joins re-reference the selection, so an
-        #   unpersisted DSIR lineage would re-run the (doc, token)
-        #   explode + aggregations several times per action. It joins
-        #   the cache slot below so eviction tracks it.
-        ranked = (
-            scored.join(
-                dsir_logweights(
-                    exact,
-                    dsir_target,
-                    hash_buckets=dsir_hash_buckets,
-                    ngrams=dsir_ngrams,
-                ).select(
-                    "doc_id",
-                    (F.col("logweight") / F.col("n_tokens")).alias(
-                        "dsir_score"
-                    ),
-                ),
-                "doc_id",
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # DSIR-mode selection is built AFTER the survivor-stats
-        # action below (optimization round 13, the quality-mode r12
-        # fold's twin): the auto-scaled cut's min/max, bucket offsets
-        # and token total all become driver-side literals via a
-        # two-step action instead of in-plan sub-plans re-executed by
-        # every downstream action.
-        sel = None
-        slot_frames = (exact, scored, ranked)
-    else:
-        # Quality-mode selection is built AFTER the survivor-stats
-        # action below, which also collects the per-bucket token
-        # totals its cut needs (r12 optimization: the in-plan
-        # offsets/total sub-plans re-executed per action).
-        sel = None
-        slot_frames = (exact, scored)
-
-    # pop+insert under ONE lock hold: a pop-then-reacquire window
-    # would let two identical concurrent calls interleave so the
-    # second's insert overwrites (and orphans, never unpersisting)
-    # the first's entry
-    with _cache_lock:
-        prev = _cache_slots.pop(slot, None)
-        _cache_slots[slot] = slot_frames
-    if prev is not None:
-        # PLAN-AWARE eviction (round-11 review finding): Spark's
-        # CacheManager keys cached data by canonicalized plan, so on
-        # a same-args repeat the new persist() calls were no-ops
-        # against the PREVIOUS call's live entries — unpersisting the
-        # old handles here would drop the shared entry out from under
-        # the frames just "persisted" above, running the repeat fully
-        # uncached. Only evict prev frames whose plan is NOT among
-        # the new slot's (e.g. a previous DSIR ranked frame for a
-        # different target, which is not part of the slot key).
-        def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-            # Fails OPEN to retention (round-12 advice finding): a
-            # reflection failure here must degrade to a cache leak
-            # (skip the unpersist, keep the previous entry alive),
-            # never to silently dropping a shared cache entry out
-            # from under the frames persisted above — which is the
-            # exact defect this plan comparison exists to prevent.
-            # Only the expected Py4J/attribute errors are swallowed
-            # (and warned about); anything else propagates.
-            try:
-                return bool(
-                    a._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(b._jdf.queryExecution().analyzed())
-                )
-            except (Py4JError, AttributeError) as exc:
-                warnings.warn(
-                    "training_pipeline: plan comparison failed "
-                    f"({exc!r}); retaining the previous slot's cache "
-                    "entry (fail-open — a leak, not an uncached "
-                    "repeat)",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                return True
-
-        for df in prev:
-            if any(_same_plan(df, nf) for nf in slot_frames):
-                continue
-            try:
-                df.unpersist()
-            except Exception:
-                # best-effort: the previous slot's session may already
-                # be stopped; its JVM-side cache died with it
-                pass
+    scored = _persist(slot, surv.select("doc_id", "quality", "n_tokens"))
 
     # Explicit buckets for BOTH two-phase scans below: their default
     # in-plan min/max (ranking._auto_bucketed) would add one
@@ -331,28 +194,47 @@ def training_pipeline(
     # non-outlier domains, so fixed-width cells cannot collapse —
     # the skew caveat on prefix_sum's bucket contract.)
     if dsir_target is not None:
-        # DSIR mode folds the auto-scaled selection cut into TWO
-        # bounded driver actions over the persisted ranked frame
-        # (optimization round 13; the r12 quality-mode fold could not
-        # cover this because the bucketing needs the score min/max
-        # before the totals can be grouped):
-        #   1. min/max of dsir_score + the survivor stats (ranked has
-        #      exactly the survivor doc set — dsir_logweights emits
-        #      every document of its input once and the join keys the
-        #      scored projection — so sum(n_tokens)/max(doc_id) here
-        #      equal the scored-frame aggregate they replace);
-        #   2. per-bucket token totals grouped by the LITERAL affine
-        #      bucket map (auto_scaled_bucket — bit-identical floors
-        #      to the in-plan broadcast min/max form, see its
-        #      docstring), ≤1024 rows collected.
-        # select_by_token_fraction_from_totals then derives the
-        # offsets as a driver-built local relation and the cut as a
-        # literal integer budget (the decimal arithmetic replicated
-        # digit-for-digit, asserted in tests), so downstream actions
-        # stop re-executing the min/max aggregate, the offsets
-        # groupBy+single-partition-window and the total-token
-        # aggregate that the in-plan auto-scaled cut re-inlined at
-        # every reference.
+        from shmr_spark.functions.dsir import dsir_logweights
+
+        # Score the persisted exact-dedup frame: scoring surv would
+        # recompute the minhash lineage, and the join onto scored
+        # restricts the weights to the near-dup survivors (DSIR
+        # estimates its distributions before selection, as in the
+        # paper). The cut ranks by the PER-TOKEN mean log-weight: the
+        # raw sum grows with document length, which the token budget
+        # already charges for, while the mean is bounded by
+        # ln(corpus_tokens + V). ranked is persisted because the pack
+        # and quality joins re-reference the selection.
+        ranked = _persist(
+            slot,
+            scored.join(
+                dsir_logweights(
+                    exact,
+                    dsir_target,
+                    hash_buckets=dsir_hash_buckets,
+                    ngrams=dsir_ngrams,
+                ).select(
+                    "doc_id",
+                    (F.col("logweight") / F.col("n_tokens")).alias(
+                        "dsir_score"
+                    ),
+                ),
+                "doc_id",
+            ),
+        )
+        # The scores cluster near 0, so the cut buckets them by the
+        # observed min/max (auto_scaled_bucket, ≤1024 buckets) rather
+        # than a static floor against the worst-case bound. That takes
+        # two bounded driver actions over ranked:
+        #   1. min/max of dsir_score + the survivor stats (ranked holds
+        #      exactly the survivor doc set, so sum(n_tokens) and
+        #      max(doc_id) equal the scored-frame aggregate);
+        #   2. per-bucket token totals grouped by the literal affine
+        #      bucket map, ≤1024 rows collected.
+        # select_by_token_fraction_from_totals then builds the offsets
+        # as a driver-side local relation and the cut as a literal
+        # budget (the decimal arithmetic replicated digit-for-digit),
+        # so downstream actions do not re-run those aggregates.
         stats = ranked.agg(
             F.min("dsir_score").alias("lo"),
             F.max("dsir_score").alias("hi"),
@@ -379,39 +261,24 @@ def training_pipeline(
                 bucket_expr=dsir_bucket,
             )
             .join(scored.select("doc_id", "quality"), "doc_id")
-            # lazily checkpoint the DSIR selection (r13; the
-            # perplexity_buckets lesson): persist() substitutes the
-            # cache at EXECUTION, but Catalyst still re-analyzes the
-            # full dsir_logweights lineage under every downstream
-            # reference (pack join, quality re-attach, shard ranking)
-            # on every action — the DSIR pipeline plan was 583
-            # Exchange / 7156 lines vs quality mode's 124/2130, all
-            # driver-side analysis cost. The checkpoint truncates the
-            # logical plan at the selection boundary; rows identical
-            # (asserted against the unchanged quality/DSIR invariant
-            # tests). Quality mode stays un-checkpointed: its
-            # selection sub-plan is cheap (r12 measured the persist
-            # variant neutral) and its plan is already an order of
-            # magnitude smaller.
+            # Lazily checkpoint the DSIR selection: persist() swaps in
+            # the cache only at execution, so Catalyst would still
+            # re-analyze the whole dsir_logweights lineage under every
+            # downstream reference on every action. The checkpoint
+            # truncates the logical plan here; rows are identical.
+            # Quality mode's selection sub-plan is cheap, so it is not
+            # checkpointed.
             .localCheckpoint(eager=False)
         )
     else:
-        # Quality mode folds the selection's bucket-offset relation
-        # into this SAME action (optimization round 12): grouping the
-        # survivor stats by the selection's exact score-bucket
-        # expression yields the per-bucket token totals (≤1001 rows
-        # collected — bounded at any corpus size), from which
-        # select_by_token_fraction_from_totals derives the offsets as
-        # a driver-built local relation and the cut as a literal
-        # integer budget. Every subsequent action over the pipeline
-        # output then skips the two extra passes over the persisted
-        # survivors (the offsets groupBy+window and the total-token
-        # aggregate) that the in-plan fraction cut re-executed each
-        # time. Output is bit-identical (the decimal cut arithmetic
-        # is replicated digit-for-digit; asserted in tests). DSIR
-        # mode keeps the in-plan auto-scaled cut: its bucketing
-        # depends on an in-plan min/max that cannot join this action
-        # without adding a second one.
+        # One action collects the survivor stats grouped by the
+        # selection's exact score-bucket expression: the per-bucket
+        # token totals (≤1001 rows at any corpus size) give the token
+        # total, max doc id and the cut's offsets, which
+        # select_by_token_fraction_from_totals builds as a driver-side
+        # local relation with a literal integer budget (the decimal
+        # arithmetic replicated digit-for-digit). Later actions then
+        # skip the offsets window and total-token passes.
         bucket_rows = (
             scored.groupBy(
                 score_bucket("quality", 1000).alias("__bucket")

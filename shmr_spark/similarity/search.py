@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from shmr_spark.dedup.embedding import hyperplanes, lsh_bucket
-from shmr_spark.functions.vectors import cosine_similarity
+from shmr_spark.functions.vectors import cosine_similarity, sql_double_array
 
 
 def _probe_df(df: DataFrame, id_col: str, vec_col: str, probe_id):
@@ -110,13 +110,8 @@ def _assign_cells(
     # Build ONE SQL string and let the JVM parse it: constructing the
     # same tree through the Column API costs k×dim py4j round trips
     # (~2 s at k=16, d=64 — measured), swamping the actual work.
-    # Float literals go through CAST('<repr>' AS DOUBLE): repr
-    # round-trips exactly and the casts constant-fold.
-    def carr(vec):
-        return "array(" + ",".join(f"CAST('{x!r}' AS DOUBLE)" for x in vec) + ")"
-
     def cos_sql(vec):
-        a = carr(vec)
+        a = sql_double_array(vec)
         # same formulation as functions.vectors.cosine_similarity;
         # nanvl maps a degenerate (zero-norm) NaN below any real sim
         # so argmax stays well-defined

@@ -3,6 +3,7 @@ the shapes that break naive operator implementations."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from shmr_spark.catalog import load_table
@@ -63,6 +64,20 @@ def test_asof_empty_left(spark, sf_dir):
         left_ts="ts", right_ts="ts", right_cols=["value"],
     )
     assert out.collect() == []
+
+
+def test_asof_rejects_non_integral_tiebreak(spark, sf_dir):
+    """The tiebreak is cast to long, so a fractional one would be
+    truncated into ties: it is refused when the join is built."""
+    ev = load_table(spark, sf_dir, "events")
+    right = ev.select(
+        "user_id", "ts", "value", F.col("event_id").cast("double").alias("tb")
+    )
+    with pytest.raises(TypeError, match="'tb' must be an integral type"):
+        asof_join(
+            ev.select("user_id", "ts"), right, on="user_id",
+            left_ts="ts", right_ts="ts", right_cols=["value"], tiebreak="tb",
+        )
 
 
 def test_asof_left_with_only_key_and_ts(spark, sf_dir):

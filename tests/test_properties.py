@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import functools
 import json
+import math
+import struct
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from shmr_spark.compat import funcs
 from shmr_spark.compat.cli import _outpath
@@ -113,8 +115,6 @@ def test_minhash_estimates_jaccard(spark, data):
 
 def _exact_scaled_sum(xs: list[float]) -> float:
     """Ground truth: the scaled-int64 semantics in exact int space."""
-    import math
-
     return sum(math.floor(x * 1_000_000.0 + 0.5) for x in xs) / 1_000_000.0
 
 
@@ -133,6 +133,28 @@ def test_dsum_matches_exact_fold(spark, xs):
     assert row.s == want
     assert row.a == want / len(xs)
 
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.floats(), min_size=1, max_size=12))
+@example(
+    [math.nan, math.inf, -math.inf, -0.0, 0.0, 5e-324, -2.2250738585072e-308,
+     1.7976931348623157e308]
+)
+def test_sql_double_array_matches_f_lit_bitwise(spark, vals):
+    """lit_double_array (and every expression string built with
+    sql_double_array) holds exactly the doubles F.lit ships, compared
+    bit for bit: NaN, ±inf, -0.0 and subnormals included."""
+    from pyspark.sql import functions as F
+
+    from shmr_spark.functions.vectors import lit_double_array
+
+    row = spark.range(1).select(
+        lit_double_array(vals).alias("got"),
+        F.array(*[F.lit(v) for v in vals]).alias("want"),
+    ).collect()[0]
+    assert [struct.pack(">d", x) for x in row.got] == [
+        struct.pack(">d", x) for x in row.want
+    ]
 
 def test_dsum_overflow_fails_loudly(spark):
     """Adversarial magnitude: 2000 rows of 9.2e9 → |sum| ≈ 1.84e13,
@@ -182,8 +204,6 @@ def test_dsum_decimal_overflow_gate_is_beyond_fast_path(spark, sf_dir):
     10000x is calibrated to sf0.01; smaller fixtures need a larger
     factor for the sum to cross the cap) so the property holds at any
     SHMR_TEST_SF_DIR instead of hardcoding one path."""
-    import math
-
     import pytest
     from pyspark.sql import functions as F
 

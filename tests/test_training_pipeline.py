@@ -6,10 +6,14 @@ scale so the timed flow is a verified flow.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from shmr_spark.catalog import load_table
 from shmr_spark.dedup import minhash_near_duplicates
+from shmr_spark.operators import training_pipeline as tp
 from shmr_spark.operators.training_pipeline import (
     clear_pipeline_caches,
     training_pipeline,
@@ -153,3 +157,117 @@ def test_training_pipeline_dsir_selection(spark, sf_dir):
         # module slot map — release them so the rest of the suite
         # doesn't carry the MEMORY_AND_DISK frames
         clear_pipeline_caches()
+
+
+# -- cache lifetime ---------------------------------------------------------
+# DataFrame.storageLevel looks the frame's plan up in Spark's
+# CacheManager, so it reports whether that plan is cached right now,
+# whichever handle persisted it.
+
+
+def _slot_frames(spark, sf_dir):
+    app = spark.sparkContext.applicationId
+    with tp._cache_lock:
+        return [
+            df
+            for key, frames in tp._cache_slots.items()
+            if key[:2] == (app, sf_dir)
+            for df in frames
+        ]
+
+
+def _cached(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_repeat_call_releases_previous_frames(spark, sf_dir):
+    """An identical repeat releases the first call's frames before it
+    persists its own: the first call's scored projection (a fresh plan
+    per call, through MinHash's checkpoints) is no longer cached, the
+    repeat's frames are, and both calls return the same rows."""
+    clear_pipeline_caches()
+    try:
+        first = training_pipeline(spark, sf_dir, n_shards=4)
+        want = sorted(first.collect())
+        first_frames = _slot_frames(spark, sf_dir)
+        assert all(map(_cached, first_frames))
+        _, first_scored = first_frames  # persisted in order: exact, scored
+
+        second = training_pipeline(spark, sf_dir, n_shards=4)
+        assert sorted(second.collect()) == want
+        assert not _cached(first_scored)
+        second_frames = _slot_frames(spark, sf_dir)
+        assert len(second_frames) == 2 and all(map(_cached, second_frames))
+        # the released first call recomputes, with the same rows
+        assert sorted(first.collect()) == want
+    finally:
+        clear_pipeline_caches()
+
+
+def test_quality_call_releases_dsir_ranked_frame(spark, sf_dir):
+    """A quality-mode call with the same arguments as a DSIR call
+    shares its slot, so it releases the DSIR ranked frame, which
+    quality mode never persists."""
+    clear_pipeline_caches()
+    try:
+        training_pipeline(
+            spark, sf_dir, n_shards=4, dsir_target=F.col("lang") == "en"
+        )
+        (ranked,) = [
+            df for df in _slot_frames(spark, sf_dir) if "dsir_score" in df.columns
+        ]
+        assert _cached(ranked)
+        training_pipeline(spark, sf_dir, n_shards=4)
+        assert not _cached(ranked)
+        assert not any(
+            "dsir_score" in df.columns for df in _slot_frames(spark, sf_dir)
+        )
+    finally:
+        clear_pipeline_caches()
+
+
+def test_clear_pipeline_caches_releases_every_slot_frame(spark, sf_dir):
+    clear_pipeline_caches()
+    training_pipeline(
+        spark, sf_dir, n_shards=4, dsir_target=F.col("lang") == "en"
+    )
+    frames = _slot_frames(spark, sf_dir)
+    assert len(frames) == 3 and all(map(_cached, frames))
+    assert clear_pipeline_caches() == 1
+    assert not any(map(_cached, frames))
+    assert _slot_frames(spark, sf_dir) == []
+
+
+def test_concurrent_identical_calls(spark, sf_dir, monkeypatch):
+    """Two identical calls on two threads may release each other's
+    cache, but both return the sequential rows, and every frame either
+    one persisted stays reachable for clear_pipeline_caches()."""
+    clear_pipeline_caches()
+    want = sorted(training_pipeline(spark, sf_dir, n_shards=4).collect())
+    clear_pipeline_caches()
+
+    persisted = []
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            futures = [
+                pool.submit(
+                    lambda: sorted(
+                        training_pipeline(spark, sf_dir, n_shards=4).collect()
+                    )
+                )
+                for _ in range(2)
+            ]
+            got = [f.result() for f in futures]
+        assert got == [want, want]
+        assert len(persisted) == 4
+    finally:
+        clear_pipeline_caches()
+    assert not any(map(_cached, persisted))
