@@ -15,7 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from shmr_spark.functions.vectors import dot, l2_norm, sql_double_array
+from shmr_spark.functions.vectors import dot, l2_norm, sql_double_array, sql_ident
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
@@ -45,7 +45,7 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
         terms = []
         for i, p in enumerate(planes):
             d = (
-                f"aggregate(zip_with(`{vec}`, {sql_double_array(p)}, "
+                f"aggregate(zip_with({sql_ident(vec)}, {sql_double_array(p)}, "
                 "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
                 "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
             )

@@ -33,6 +33,13 @@ def sql_double_array(vals) -> str:
     return "array(" + ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vals) + ")"
 
 
+def sql_ident(name: str) -> str:
+    """SQL text of a column name for expression strings: wrapped in
+    backticks, with any backtick inside it doubled, so names holding
+    backticks, dots or spaces parse as one identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lit_double_array(vals) -> Column:
     """Constant array<double> column of ``vals`` as ONE parsed
     expression (see ``sql_double_array``)."""

@@ -16,7 +16,9 @@ are small bounded aggregates over the persisted survivors (token
 total, max doc id and per-bucket token totals), taken at the point a
 production build writes to storage: they size the pack/shard buckets
 and turn the budget cut into literals, so later actions do not re-run
-those sub-plans.
+those sub-plans. The selection is lazily checkpointed as well, so the
+first action over the result also runs the selection's shuffle
+stages, once, when that checkpoint is taken.
 """
 
 from __future__ import annotations
@@ -261,14 +263,6 @@ def training_pipeline(
                 bucket_expr=dsir_bucket,
             )
             .join(scored.select("doc_id", "quality"), "doc_id")
-            # Lazily checkpoint the DSIR selection: persist() swaps in
-            # the cache only at execution, so Catalyst would still
-            # re-analyze the whole dsir_logweights lineage under every
-            # downstream reference on every action. The checkpoint
-            # truncates the logical plan here; rows are identical.
-            # Quality mode's selection sub-plan is cheap, so it is not
-            # checkpointed.
-            .localCheckpoint(eager=False)
         )
     else:
         # One action collects the survivor stats grouped by the
@@ -298,6 +292,12 @@ def training_pipeline(
             [(r["__bucket"], r["__btot"]) for r in bucket_rows],
             fraction=budget_fraction,
         )
+    # Lazily checkpoint the selection: pack_sequences and range_shards
+    # each scan their input twice, so without it Catalyst re-analyzes
+    # and re-runs the selection lineage under every one of those
+    # references on every action. The checkpoint truncates the logical
+    # plan here; rows are identical.
+    sel = sel.localCheckpoint(eager=False)
     id_width = max(1, int(max_doc_id) // 4096 + 1)
     doc_bucket = F.floor(F.col("doc_id") / F.lit(id_width)).cast("long")
 

@@ -62,6 +62,8 @@ def get_spark(
         # the shmr source's pushdown tier requires it (and hard-errors
         # without it, hence that tier is opt-in per read)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # a training_pipeline call makes ~220 classes; at 100 each warm call recompiled (~1.8 s)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         # in local mode the driver JVM IS the engine: every executor
         # thread's shuffle/sort state lives in this one heap. Sized

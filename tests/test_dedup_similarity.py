@@ -152,6 +152,29 @@ def test_embedding_neardup_planted(spark, sf_dir):
     assert any(r.id_a == 0 and r.id_b == 100000 for r in pairs)
 
 
+def test_lsh_bucket_quotes_awkward_column_names(spark, sf_dir):
+    """The expression-string path of lsh_bucket quotes the column name
+    with sql_ident, so names holding a backtick or a dot give the same
+    buckets as the Column path."""
+    from shmr_spark.dedup.embedding import hyperplanes, lsh_bucket
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first().embedding)
+    planes = hyperplanes(dim, n_planes=8)
+    for name in ("emb`x", "a.b"):
+        df = emb.select("vec_id", F.col("embedding").alias(name))
+        col = F.col("`" + name.replace("`", "``") + "`")
+        rows = (
+            df.select(
+                lsh_bucket(name, planes).alias("s"),
+                lsh_bucket(col, planes).alias("c"),
+            )
+            .collect()
+        )
+        assert rows and all(r.s == r.c for r in rows), name
+        assert len({r.s for r in rows}) > 1, name
+
+
 def test_embedding_neardup_multiprobe_recall(spark, sf_dir):
     """Multi-probe expansion is sound and monotone: r=1 candidates are
     a superset of exact-bucket pairs, a subset of the all-pairs truth

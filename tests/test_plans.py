@@ -668,7 +668,8 @@ def test_prod_shape_plan_size_budgets(spark, sf_dir):
     """Same budget gate for the bench prod shapes (not registry
     gates — pipeline_e2e WAS the 402-Exchange offender). Measured at
     sf0.001 post-fold: dedup_minhash_prod 2/77, knn_join_lsh_prod
-    2/106, pipeline_e2e 124/2130."""
+    2/106, pipeline_e2e 25/623 (its ceiling fails if the selection
+    is inlined under pack_sequences and range_shards again)."""
     from shmr_spark.prod_shapes import (
         dedup_minhash_prod,
         knn_join_lsh_prod,
@@ -678,7 +679,7 @@ def test_prod_shape_plan_size_budgets(spark, sf_dir):
     caps = {
         "dedup_minhash_prod": (dedup_minhash_prod, 6, 160),
         "knn_join_lsh_prod": (knn_join_lsh_prod, 6, 220),
-        "pipeline_e2e": (pipeline_e2e, 180, 3200),
+        "pipeline_e2e": (pipeline_e2e, 38, 940),
     }
     offenders = []
     for name, (fn, ex_cap, line_cap) in caps.items():

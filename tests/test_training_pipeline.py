@@ -6,6 +6,8 @@ scale so the timed flow is a verified flow.
 
 from __future__ import annotations
 
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import StorageLevel
@@ -18,6 +20,43 @@ from shmr_spark.operators.training_pipeline import (
     clear_pipeline_caches,
     training_pipeline,
 )
+
+
+# Two identical calls in a fresh engine session; prints the number of
+# classes each call compiled.
+_REPEAT_COMPILES = """
+import sys
+from shmr_spark import get_spark
+from shmr_spark.operators.training_pipeline import training_pipeline
+spark = get_spark(app_name="codegen_reuse", shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "2g"})
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+compiles = compiles.METRIC_COMPILATION_TIME()
+for _ in range(2):
+    before = compiles.getCount()
+    training_pipeline(spark, sys.argv[1], n_shards=4).collect()
+    print(compiles.getCount() - before)
+spark.stop()
+"""
+
+
+def test_repeat_call_reuses_generated_classes(sf_dir):
+    """A warm repeat reuses the first call's generated classes. One
+    call generates ~220 of them; at Spark's default codegen cache of
+    100 entries every repeat recompiled them all. This also guards the
+    cache conf's name, which is internal to Spark. The calls run in a
+    session of their own: in the session the other tests share, earlier
+    tests warm part of the first call and the repeat's count varies
+    with what they ran."""
+    out = subprocess.run(
+        [sys.executable, "-c", _REPEAT_COMPILES, sf_dir],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        check=True,
+    )
+    first, second = map(int, out.stdout.split()[-2:])
+    assert second < 0.1 * first, (first, second)
 
 
 def test_training_pipeline_invariants(spark, sf_dir, tmp_path):
