@@ -52,13 +52,117 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from shmr_spark import get_spark  # noqa: E402
+from shmr_spark.prod_shapes import PROD_SHAPES, SCALE_EXTRA_GATES  # noqa: E402
 from shmr_spark.queries import load_all  # noqa: E402
+
+
+def _staged_events(staged: dict, key, sf_dir: str, prefix: str) -> str:
+    """A copy of ``sf_dir``'s events for a stream to replay, made once
+    per ``key`` and kept in ``staged``: copying grows with corpus size
+    and would otherwise inflate every timed repetition with file I/O
+    that is not engine work."""
+    import tempfile
+
+    from shmr_spark.queries.analytics import stage_events_copy
+
+    d = staged.get(key)
+    if d is None:
+        d = tempfile.mkdtemp(prefix=prefix)
+        stage_events_copy(sf_dir, d)
+        staged[key] = d
+    return d
+
+
+def _sessionize_stream(staged: dict, spark, sf_dir, **stream_kw):
+    """The STATEFUL sessionizer (applyInPandasWithState) replayed to
+    completion over the corpus's events — the Python-state path whose
+    scale behavior can't be inferred from the batch window variant."""
+    from pyspark.sql import functions as F
+
+    from shmr_spark.streaming import read_events_stream, sessionize_stream
+
+    d = _staged_events(staged, sf_dir, sf_dir, "shmr_bench_sess_")
+    q = (
+        sessionize_stream(read_events_stream(spark, d, **stream_kw))
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("bench_sessionize_stream")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return (
+        spark.sql("SELECT * FROM bench_sessionize_stream")
+        .groupBy("user_id")
+        .agg(
+            F.max("n_sessions").alias("n_sessions"),
+            F.max("n_events").alias("n_events"),
+        )
+    )
+
+
+def _tumbling_per_file(staged: dict, state_partitions, spark, sf_dir):
+    """The tumbling-window replay with one micro-batch per input file:
+    its sf1/base wall ratio reads trigger count (8 files at sf1), not
+    rows, so it isolates the per-trigger fixed cost."""
+    from shmr_spark.streaming import (
+        read_events_stream,
+        run_stream_to_memory,
+        tumbling_window_stream,
+    )
+
+    tag = "per_file" if state_partitions is None else f"per_file_s{state_partitions}"
+    d = _staged_events(staged, (tag, sf_dir), sf_dir, f"shmr_bench_tumb_{tag}_")
+    return run_stream_to_memory(
+        tumbling_window_stream(
+            read_events_stream(spark, d, max_files_per_trigger=1)
+        ),
+        f"bench_tumbling_{tag}",
+        output_mode="complete",
+        state_partitions=state_partitions,
+    )
+
+
+def scale_extra_rows(registry: dict, staged: dict) -> dict:
+    """Row name → ``fn(spark, sf_dir)`` for the scale check's extra rows:
+    the SCALE_EXTRA_GATES, the batch PROD_SHAPES and four streaming
+    replays. ``staged`` caches the replays' event copies.
+
+    The extras are costlier than the relational headliners, so they stay
+    out of the sf0.1 headline total (which tracks round-over-round
+    regressions) but get base timings. Reading dedup_minhash_prod's and
+    duplicate_spans' scale ratios: make_scaled replicates document TEXTS
+    verbatim n×, so true near-dup pairs grow ~n² per cluster — at n=10
+    the verify stage does ~100× the pair work, and a ~5× wall time is
+    strongly sublinear in actual work, not superlinear in rows.
+
+    Since round 6 the engine default batches up to 64 files per trigger
+    (read_events_stream), so sessionize_stream and the registry's
+    streaming_tumbling read rows, not trigger count. The *_per_file rows
+    keep the per-trigger fixed cost (state-store commit + batch planning,
+    ~0.9 s each) measured as the explicitly-degenerate framing; the _s8
+    row pins the state-partition count to 8 (streaming/tuning.py: 32
+    state-store commits per trigger -> 8; interleaved A/B median trigger
+    1430 -> 559 ms at the 10x corpus), so the option's effect is
+    recorded beside the untuned row."""
+    rows = {n: registry[n].fn for n in SCALE_EXTRA_GATES}
+    rows.update(PROD_SHAPES)
+    rows["sessionize_stream"] = partial(_sessionize_stream, staged)
+    rows["sessionize_stream_per_file"] = partial(
+        _sessionize_stream, staged, max_files_per_trigger=1
+    )
+    rows["streaming_tumbling_per_file"] = partial(_tumbling_per_file, staged, None)
+    rows["streaming_tumbling_per_file_s8"] = partial(_tumbling_per_file, staged, 8)
+    return rows
 
 
 def main() -> None:
@@ -67,30 +171,7 @@ def main() -> None:
     spark = get_spark(app_name="shmr_spark_bench")
 
     registry = load_all()
-    headline = {n: s for n, s in registry.items() if s.headline}
-
-    # LLM-pipeline representatives measured in the scale check (plus
-    # every headliner): near-dup dedup, the storage-pruned ANN index,
-    # and the heavy-hitters sketch — so the pipeline scale story is
-    # measured, not argued. They are costlier than the relational
-    # headliners, so they stay out of the sf0.1 headline total (which
-    # tracks round-over-round regressions) but get base timings below.
-    # dedup_minhash runs its PRODUCTION shape here (16-band S-curve),
-    # not the gate's degenerate single-row banding, which exists for
-    # oracle equivalence and admits far more candidates.
-    # Reading its scale ratio: make_scaled replicates document TEXTS
-    # verbatim n×, so true near-dup pairs grow ~n² per cluster — at
-    # n=10 the verify stage does ~100× the pair work, and a ~5× wall
-    # time is strongly sublinear in actual work, not superlinear in
-    # rows.
-    # (the shape itself lives in shmr_spark.prod_shapes, shared with
-    # tools/audit_100x_llm.py so the timed plan and the audited plan
-    # cannot drift apart)
-    from shmr_spark.prod_shapes import (
-        dedup_minhash_prod as _dedup_minhash_prod,
-        knn_join_lsh_prod as _knn_join_lsh_prod,
-        pipeline_e2e as _pipeline_e2e,
-    )
+    headline = {n: s.fn for n, s in registry.items() if s.headline}
 
     # pair counts alongside the wall time (untimed pass): the ~5×
     # wall at 10× rows is only interpretable against the ~100× growth
@@ -115,204 +196,24 @@ def main() -> None:
         verified = verify_jaccard_pairs(sh, cands, 0.7).count()
         return {"candidate_pairs": candidates, "verified_pairs": verified}
 
-    # the STATEFUL sessionizer (applyInPandasWithState) replayed to
-    # completion over the corpus's events — the Python-state path whose
-    # scale behavior can't be inferred from the batch window variant.
-    # The source copy is made ONCE per corpus (cached dir): copying
-    # grows with corpus size and would otherwise inflate every timed
-    # repetition with file I/O that is not engine work. Keys are the
-    # corpus dir (plus a variant tag for the batched-trigger row);
-    # every staged dir is removed at process exit — these are
+    # every staged event copy is removed at process exit — these are
     # corpus-sized copies that would otherwise accumulate in /tmp
-    # across bench runs.
+    # across bench runs
     import atexit
     import shutil
 
-    _sess_src_cache: dict = {}
+    staged: dict = {}
     atexit.register(
-        lambda: [
-            shutil.rmtree(d, ignore_errors=True)
-            for d in _sess_src_cache.values()
-        ]
+        lambda: [shutil.rmtree(d, ignore_errors=True) for d in staged.values()]
     )
-
-    def _sessionize_stream(spark, sf_dir, **stream_kw):
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from shmr_spark.queries.analytics import stage_events_copy
-        from shmr_spark.streaming import read_events_stream, sessionize_stream
-
-        d = _sess_src_cache.get(sf_dir)
-        if d is None:
-            d = tempfile.mkdtemp(prefix="shmr_bench_sess_")
-            stage_events_copy(sf_dir, d)
-            _sess_src_cache[sf_dir] = d
-        q = (
-            sessionize_stream(read_events_stream(spark, d, **stream_kw))
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("bench_sessionize_stream")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return (
-            spark.sql("SELECT * FROM bench_sessionize_stream")
-            .groupBy("user_id")
-            .agg(
-                F.max("n_sessions").alias("n_sessions"),
-                F.max("n_events").alias("n_events"),
-            )
-        )
-
-    # primary row = the engine default (batched triggers since round
-    # 6 — read_events_stream defaults maxFilesPerTrigger=64, so the
-    # scale ratio reads rows, not trigger count)
-    def _sessionize_stream_prod(spark, sf_dir):
-        return _sessionize_stream(spark, sf_dir)
-
-    # the explicitly-degenerate per-file framing: one micro-batch per
-    # input file, kept so the ~0.9 s/trigger state-store + planning
-    # overhead stays measured (it is the cost a misconfigured
-    # deployment pays, not the default)
-    def _sessionize_stream_per_file(spark, sf_dir):
-        return _sessionize_stream(spark, sf_dir, max_files_per_trigger=1)
-
-    class _Spec:
-        def __init__(self, fn):
-            self.fn = fn
-
-    # sessionize (window+agg over events) and streaming_tumbling (a
-    # real Structured Streaming replay to completion) give the
-    # stateful/streaming paths a measured scale row — the stateful
-    # sessionizer was the last plausible scale cliff with no timing.
-    # Since round 6 the engine default batches up to 64 files per
-    # trigger (read_events_stream), so these primary rows read rows,
-    # not trigger count; the *_per_file rows below keep the
-    # per-trigger fixed cost (state-store commit + batch planning,
-    # ~0.9 s each) measured as the explicitly-degenerate framing.
-    # duplicate_spans: corpus-sized explode + count + join-back — the
-    # exact-substring dedup path; its scale ratio reads like
-    # dedup_minhash_prod's (the derived corpus replicates texts n×, so
-    # duplicated-gram hits grow superlinearly in rows).
-    scale_extra = {
-        n: registry[n]
-        for n in (
-            "similarity_indexed_topk",
-            "heavy_hitters_tokens",
-            "sessionize",
-            "streaming_tumbling",
-            "duplicate_spans",
-            "rollup_incremental",
-            # TPC-H completion batch representatives: the two heaviest
-            # shapes — Q21 (join + two-level distinct-pair aggregate)
-            # and Q9 (4-table join rollup) — so the new relational
-            # plans carry measured 10x evidence like the pipeline ops
-            "q21_single_fault_suppliers",
-            "q9_profit_by_nation",
-            # round 12 (optimization): the corpus-statistics
-            # composites — the heaviest registry plans with no timed
-            # row until now (perplexity_buckets composes the bigram-LM
-            # scorer with the grouped-ntile machinery, ~2.4 s at
-            # sf0.1 / ~10 s at 10x, ratio ~4x = sublinear-healthy;
-            # the NB pair shares the train/score split). Added so
-            # optimization round 2 starts from hard numbers instead
-            # of the plan-only OK in the r12 checklist.
-            "perplexity_buckets",
-            "nb_lang_classifier",
-            "nb_target_select",
-        )
-        if n in registry
-    }
-    scale_extra["dedup_minhash_prod"] = _Spec(_dedup_minhash_prod)
-    scale_extra["knn_join_lsh_prod"] = _Spec(_knn_join_lsh_prod)
-    scale_extra["sessionize_stream"] = _Spec(_sessionize_stream_prod)
-    scale_extra["sessionize_stream_per_file"] = _Spec(_sessionize_stream_per_file)
-
-    # the per-file-trigger tumbling replay — since round 6 the
-    # DEGENERATE framing (the engine default batches 64 files per
-    # trigger, so the registry row `streaming_tumbling` is already
-    # the amortized config); this row isolates the per-trigger fixed
-    # cost: its sf1/base wall ratio reads trigger count (8 files at
-    # sf1), not rows.
-    def _streaming_tumbling_per_file(spark, sf_dir):
-        from shmr_spark.queries.analytics import stage_events_copy
-        from shmr_spark.streaming import (
-            read_events_stream,
-            run_stream_to_memory,
-            tumbling_window_stream,
-        )
-
-        d = _sess_src_cache.get(("per_file", sf_dir))
-        if d is None:
-            import tempfile
-
-            d = tempfile.mkdtemp(prefix="shmr_bench_tumb_per_file_")
-            stage_events_copy(sf_dir, d)
-            _sess_src_cache[("per_file", sf_dir)] = d
-        return run_stream_to_memory(
-            tumbling_window_stream(
-                read_events_stream(spark, d, max_files_per_trigger=1)
-            ),
-            "bench_tumbling_per_file",
-            output_mode="complete",
-        )
-
-    scale_extra["streaming_tumbling_per_file"] = _Spec(_streaming_tumbling_per_file)
-
-    # round 13 (ADDED row, nothing removed/renamed): the same
-    # degenerate per-file replay with the state-partition count pinned
-    # to 8 via the new per-stream option (streaming/tuning.py) — the
-    # measured per-trigger fixed-cost lever (32 state-store commits per
-    # trigger -> 8; interleaved A/B median trigger 1430 -> 559 ms at
-    # the 10x corpus). Riding next to the untuned row keeps the
-    # option's effect driver-recorded every round.
-    def _streaming_tumbling_per_file_s8(spark, sf_dir):
-        from shmr_spark.queries.analytics import stage_events_copy
-        from shmr_spark.streaming import (
-            read_events_stream,
-            run_stream_to_memory,
-            tumbling_window_stream,
-        )
-
-        d = _sess_src_cache.get(("per_file_s8", sf_dir))
-        if d is None:
-            import tempfile
-
-            d = tempfile.mkdtemp(prefix="shmr_bench_tumb_per_file_s8_")
-            stage_events_copy(sf_dir, d)
-            _sess_src_cache[("per_file_s8", sf_dir)] = d
-        return run_stream_to_memory(
-            tumbling_window_stream(
-                read_events_stream(spark, d, max_files_per_trigger=1)
-            ),
-            "bench_tumbling_per_file_s8",
-            output_mode="complete",
-            state_partitions=8,
-        )
-
-    scale_extra["streaming_tumbling_per_file_s8"] = _Spec(
-        _streaming_tumbling_per_file_s8
-    )
-
-    # the composed training-data flow (clean → exact+minhash dedup →
-    # quality filter → token-budget select → pack → sorted shards) as
-    # ONE lazy plan — the invariant chain is asserted in
-    # tests/test_training_pipeline.py; here it gets a measured
-    # base-vs-10× wall so the composition (not just each stage) has
-    # scale evidence.
-    scale_extra["pipeline_e2e"] = _Spec(_pipeline_e2e)
+    scale_extra = scale_extra_rows(registry, staged)
 
     # Warmup pass (untimed): JVM JIT + whole-stage codegen compilation
     # + parquet footer caches. The timed pass then measures engine
     # throughput, not cold-start — standard steady-state methodology;
     # on a long-lived cluster the JVM is warm.
-    for name, spec in sorted(headline.items()):
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    for name, fn in sorted(headline.items()):
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Machine-load SENTINEL (r11 verdict task 2): a fixed calibration
     # workload — corpus-independent, registry-independent, pure
@@ -355,10 +256,10 @@ def main() -> None:
     # suite).
     from shmr_spark.metrics import noop_sink, shuffle_bytes_of
 
-    def _shuffle_pass(specs, d) -> dict[str, dict[str, int]] | None:
+    def _shuffle_pass(fns, d) -> dict[str, dict[str, int]] | None:
         out: dict[str, dict[str, int]] = {}
-        for name, spec in sorted(specs.items()):
-            out[name] = shuffle_bytes_of(spark, lambda: noop_sink(spec.fn(spark, d)))
+        for name, fn in sorted(fns.items()):
+            out[name] = shuffle_bytes_of(spark, lambda: noop_sink(fn(spark, d)))
         # guard the instrument: the headline set always contains
         # queries that genuinely shuffle (join_three_way, q5), so an
         # all-zero pass means the status-store read broke (API drift,
@@ -381,9 +282,9 @@ def main() -> None:
     # is distinguishable from a one-off stall (min fine, median up)
     reps: dict[str, list[float]] = {n: [] for n in headline}
     for _ in range(5):
-        for name, spec in sorted(headline.items()):
+        for name, fn in sorted(headline.items()):
             t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
+            df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             reps[name].append(round(time.perf_counter() - t0, 3))
 
@@ -421,9 +322,9 @@ def main() -> None:
         # computable for them too (headliners' base times are in
         # result["queries"])
         for _ in range(2):
-            for name, spec in sorted(scale_extra.items()):
+            for name, fn in sorted(scale_extra.items()):
                 t0 = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 dt = round(time.perf_counter() - t0, 3)
                 extra_base[name] = min(extra_base.get(name, dt), dt)
 
@@ -439,9 +340,9 @@ def main() -> None:
 
         timed = {**headline, **scale_extra}
         for _ in range(2):
-            for name, spec in sorted(timed.items()):
+            for name, fn in sorted(timed.items()):
                 t0 = time.perf_counter()
-                spec.fn(spark, scaled_dir).write.format("noop").mode(
+                fn(spark, scaled_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = round(time.perf_counter() - t0, 3)
@@ -454,19 +355,9 @@ def main() -> None:
 
     if scale_on:
         shuffle_extras = {
-            n: scale_extra[n]
-            for n in (
-                "dedup_minhash_prod",
-                "pipeline_e2e",
-                "duplicate_spans",
-                "q9_profit_by_nation",
-                "q21_single_fault_suppliers",
-                # round 9: the remaining heavy LLM-pipeline flagships,
-                # so the whole set carries byte-scaling evidence
-                "knn_join_lsh_prod",
-                "heavy_hitters_tokens",
-            )
-            if n in scale_extra
+            n: fn
+            for n, fn in scale_extra.items()
+            if n in PROD_SHAPES or SCALE_EXTRA_GATES.get(n)
         }
 
         def _extras_shuffle(d) -> dict[str, dict[str, int]] | None:

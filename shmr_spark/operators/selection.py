@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from shmr_spark.functions.vectors import sql_ident
+
 
 def score_bucket(score_col: str, score_buckets: int):
     """The non-auto-scaled bucket expression, shared between the
@@ -333,23 +335,25 @@ def apportion(
 
     Returns (key_cols..., n BIGINT, quota BIGINT).
     """
-    w = F.col(weight_col).cast("long")
+    keys = [F.col(sql_ident(c)) for c in key_cols]
+    weight = sql_ident(weight_col)
+    w = F.col(weight).cast("long")
     tot_w = Window.partitionBy()  # group-count rows only
     W = F.sum(w).over(tot_w)
-    base = F.expr(f"({total} * CAST({weight_col} AS BIGINT)) div __W")
-    rem = F.expr(f"({total} * CAST({weight_col} AS BIGINT)) % __W")
+    base = F.expr(f"({total} * CAST({weight} AS BIGINT)) div __W")
+    rem = F.expr(f"({total} * CAST({weight} AS BIGINT)) % __W")
     staged = (
         weights_df.withColumn("__W", W)
         .withColumn("__base", base)
         .withColumn("__rem", rem)
     )
     leftover = F.lit(total) - F.sum("__base").over(tot_w)
-    rk = Window.orderBy(F.col("__rem").desc(), *[F.col(c) for c in key_cols])
+    rk = Window.orderBy(F.col("__rem").desc(), *keys)
     return (
         staged.withColumn("__lo", leftover)
         .withColumn("__rk", F.row_number().over(rk))
         .select(
-            *key_cols,
+            *keys,
             w.alias("n"),
             (
                 F.col("__base")

@@ -1,11 +1,13 @@
-"""Production shapes of the LLM-pipeline flagships measured by
-bench.py AND tools/audit_100x_llm.py.
+"""The bench suites beside the registry's headline set, and the
+production shapes of the LLM-pipeline flagships, shared by bench.py,
+tools/capture_plans.py and tools/audit_100x_llm.py.
 
-Shared module so the shape the bench times and the shape the 100×
-audit cites (AUDIT_100X_LLM.json — quoted by dedup/minhash.py and
-similarity/knn.py docstrings) are the same code object and cannot
-drift apart. Gate queries deliberately do NOT use these: the gates
-pin oracle-equivalence configs (degenerate banding, full-probe
+Each suite is declared here once, so the rows bench.py times, the
+plans capture_plans.py records and the shapes the 100× audit cites
+(AUDIT_100X_LLM.json — quoted by dedup/minhash.py and
+similarity/knn.py docstrings) cannot drift apart. Gate queries
+deliberately do NOT use the prod shapes: the gates pin
+oracle-equivalence configs (degenerate banding, full-probe
 expansion), while these are the S-curve/pruned configs a production
 pipeline runs.
 """
@@ -49,3 +51,29 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shmr_spark.operators.training_pipeline import training_pipeline
 
     return training_pipeline(spark, sf_dir)
+
+
+# Registry gates bench.py times at both scales beside the headline set:
+# the LLM-pipeline, streaming and heavy TPC-H representatives, and the
+# corpus-statistics composites. True marks the gates whose shuffle
+# bytes bench.py also records at both scales, with every prod shape.
+SCALE_EXTRA_GATES = {
+    "similarity_indexed_topk": False,
+    "heavy_hitters_tokens": True,
+    "sessionize": False,
+    "streaming_tumbling": False,
+    "duplicate_spans": True,
+    "rollup_incremental": False,
+    "q21_single_fault_suppliers": True,
+    "q9_profit_by_nation": True,
+    "perplexity_buckets": False,
+    "nb_lang_classifier": False,
+    "nb_target_select": False,
+}
+
+# The batch prod shapes, by bench row name.
+PROD_SHAPES = {
+    "dedup_minhash_prod": dedup_minhash_prod,
+    "knn_join_lsh_prod": knn_join_lsh_prod,
+    "pipeline_e2e": pipeline_e2e,
+}

@@ -21,10 +21,10 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from bench import compact_summary  # noqa: E402
+from bench import compact_summary, scale_extra_rows  # noqa: E402
 from shmr_spark.queries import load_all  # noqa: E402
 
-# Synthetic stand-ins for bench.main()'s local scale_extra names.
+# Synthetic stand-ins for bench.scale_extra_rows' row names.
 # These pad only result fields compact_summary DROPS (scale_check's
 # per-query maps), so they cannot move the tested line length today —
 # they exist so that if the compact shape ever starts carrying
@@ -120,3 +120,29 @@ def test_compact_summary_without_scale_check():
     compact = compact_summary(result)
     assert "scale_value" not in compact
     assert compact["value"] == result["value"]
+
+
+def test_scale_extra_row_names():
+    """The scale check's extra rows, pinned by name: 11 registry gates,
+    3 batch prod shapes and 4 streaming replays. Building the map
+    starts no Spark session."""
+    assert sorted(scale_extra_rows(load_all(), {})) == [
+        "dedup_minhash_prod",
+        "duplicate_spans",
+        "heavy_hitters_tokens",
+        "knn_join_lsh_prod",
+        "nb_lang_classifier",
+        "nb_target_select",
+        "perplexity_buckets",
+        "pipeline_e2e",
+        "q21_single_fault_suppliers",
+        "q9_profit_by_nation",
+        "rollup_incremental",
+        "sessionize",
+        "sessionize_stream",
+        "sessionize_stream_per_file",
+        "similarity_indexed_topk",
+        "streaming_tumbling",
+        "streaming_tumbling_per_file",
+        "streaming_tumbling_per_file_s8",
+    ]

@@ -9,6 +9,7 @@ Spark-backed: example counts stay small — every example is a job.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -52,6 +53,23 @@ def test_apportion_matches_hamilton(spark, weights, total):
     W = sum(weights)
     for k, w in zip(keys, weights):
         assert total * w // W <= got[k] <= total * w // W + 1
+
+
+@pytest.mark.parametrize(
+    "key, weight", [("lang", "n w"), ("lang", "n.w"), ("lang", "n`w"), ("la.ng", "n")]
+)
+def test_apportion_quotes_awkward_column_names(spark, key, weight):
+    """Weight and key names holding a space, a dot or a backtick give
+    the same quotas as a plain ``lang``/``n`` frame."""
+    from shmr_spark.operators.selection import apportion
+
+    rows = [("en", 7), ("de", 3), ("fr", 5), ("es", 1)]
+    plain = spark.createDataFrame(rows, "lang string, n long")
+    want = {r.lang: r.quota for r in apportion(plain, 99, ["lang"]).collect()}
+    df = plain.toDF(key, weight)
+    got = {r[0]: r.quota for r in apportion(df, 99, [key], weight).collect()}
+    assert got == want
+    assert sum(want.values()) == 99
 
 
 # -- prefix_sum: two-phase scan ≡ sequential, incl. NULL semantics ----------

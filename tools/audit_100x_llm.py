@@ -33,14 +33,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from shmr_spark.metrics import noop_sink, shuffle_bytes_of  # noqa: E402
+from shmr_spark.prod_shapes import PROD_SHAPES  # noqa: E402
 from shmr_spark.session import get_spark  # noqa: E402
-
-
-from shmr_spark.prod_shapes import (  # noqa: E402
-    dedup_minhash_prod as _dedup_minhash_prod,
-    knn_join_lsh_prod as _knn_join_lsh_prod,
-    pipeline_e2e as _pipeline_e2e,
-)
 
 
 def _knn_join_lsh_fixed_probes(spark, sf_dir):
@@ -102,10 +96,10 @@ def main() -> None:
     specs = {
         "heavy_hitters_tokens": reg["heavy_hitters_tokens"].fn,
         "similarity_indexed_topk": reg["similarity_indexed_topk"].fn,
-        "knn_join_lsh_prod": _knn_join_lsh_prod,
+        "knn_join_lsh_prod": PROD_SHAPES["knn_join_lsh_prod"],
         "knn_join_lsh_fixed_probes": _knn_join_lsh_fixed_probes,
-        "dedup_minhash_prod": _dedup_minhash_prod,
-        "pipeline_e2e": _pipeline_e2e,
+        "dedup_minhash_prod": PROD_SHAPES["dedup_minhash_prod"],
+        "pipeline_e2e": PROD_SHAPES["pipeline_e2e"],
         # r11: DSIR selection — distinct-(doc,token) exchange, fixed-k
         # TakeOrdered; expected byte-linear (~10.9x measured)
         "dsir_select": reg["dsir_select"].fn,

@@ -7,8 +7,9 @@ Usage:
     python tools/capture_plans.py <tag> <suffix> [query ...]
 
 With no query names, captures the headline set plus the bench scale
-extras that live in the registry. ``suffix`` is typically ``before``
-or ``after``.
+extras that are not streaming replays: SCALE_EXTRA_GATES and the
+PROD_SHAPES (shmr_spark/prod_shapes.py). ``suffix`` is typically
+``before`` or ``after``.
 """
 
 from __future__ import annotations
@@ -21,18 +22,8 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from shmr_spark import get_spark  # noqa: E402
+from shmr_spark.prod_shapes import PROD_SHAPES, SCALE_EXTRA_GATES  # noqa: E402
 from shmr_spark.queries import load_all  # noqa: E402
-
-DEFAULT_EXTRAS = (
-    "similarity_indexed_topk",
-    "heavy_hitters_tokens",
-    "sessionize",
-    "streaming_tumbling",
-    "duplicate_spans",
-    "rollup_incremental",
-    "q21_single_fault_suppliers",
-    "q9_profit_by_nation",
-)
 
 
 def main() -> None:
@@ -44,15 +35,18 @@ def main() -> None:
 
     spark = get_spark(app_name="capture_plans")
     registry = load_all()
+    fns = {n: s.fn for n, s in registry.items()} | PROD_SHAPES
     if not names:
         names = sorted(
-            n for n, s in registry.items() if s.headline or n in DEFAULT_EXTRAS
+            [n for n, s in registry.items() if s.headline]
+            + list(SCALE_EXTRA_GATES)
+            + list(PROD_SHAPES)
         )
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     for name in names:
-        df = registry[name].fn(spark, sf_dir)
+        df = fns[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(jvm_mode)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
