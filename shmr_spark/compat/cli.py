@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import argparse
 import glob as globmod
-import gzip
-import bz2
 import json
 import math
 import os
@@ -41,6 +39,7 @@ from typing import Any
 
 from shmr_spark.compat.funcs import json_dumps, json_loads, resolve_fn
 from shmr_spark.session import get_spark
+from shmr_spark.sources.shmr_datasource import _meta_path, _open_by_ext, _write_meta
 
 
 # -- I/O helpers -----------------------------------------------------------
@@ -72,20 +71,6 @@ def _outpath(template: str, stem: str, auto: int | None = None) -> str:
     return out
 
 
-def _open_write(path: str):
-    if path.endswith(".gz"):
-        return gzip.open(path, "wb")
-    if path.endswith(".bz2"):
-        return bz2.open(path, "wb")
-    return open(path, "wb")
-
-
-def _write_meta(path: str, n: int) -> None:
-    meta = os.path.splitext(path)[0] + ".meta"
-    with open(meta, "w") as f:
-        json.dump({"n_records": n}, f)
-
-
 def _save_lines(rdd, outfile: str, auto_mkdir: bool = True, delete_on_empty: bool = False) -> int:
     """Persist an RDD of serialized bytes as ONE file + .meta sidecar.
     Parts stream through a temp saveAsTextFile dir and concatenate —
@@ -97,7 +82,7 @@ def _save_lines(rdd, outfile: str, auto_mkdir: bool = True, delete_on_empty: boo
     text = rdd.map(lambda b: b.decode() if isinstance(b, (bytes, bytearray)) else str(b))
     text.saveAsTextFile(target)
     n = 0
-    with _open_write(outfile) as out:
+    with _open_by_ext(outfile, "wb") as out:
         for part in sorted(os.listdir(target)):
             if not part.startswith("part-"):
                 continue
@@ -160,7 +145,7 @@ def op_count(io: PartitionIO, outfile: str | None = None, auto_mkdir: bool = Fal
     total = 0
     memoized = True
     for p in io.paths:
-        meta = os.path.splitext(p)[0] + ".meta"
+        meta = _meta_path(p)
         if os.path.exists(meta):
             with open(meta) as f:
                 total += json.load(f)["n_records"]
@@ -237,7 +222,7 @@ def op_reduce(io: PartitionIO, fn: str, outfile: str, init_val: Any = _NO_INIT) 
         seeded = True
     result = accum if seeded else None
     os.makedirs(os.path.dirname(os.path.abspath(outfile)) or ".", exist_ok=True)
-    with _open_write(_outpath(outfile, io.stem)) as out:
+    with _open_by_ext(_outpath(outfile, io.stem), "wb") as out:
         out.write(io.ser(result) + b"\n")
     _write_meta(_outpath(outfile, io.stem), 1)
 
@@ -289,7 +274,7 @@ def op_split_by_key(io: PartitionIO, key_fn: str, outfile: str, num_partitions: 
         out = _outpath(outfile, io.stem, auto=i)
         os.makedirs(os.path.dirname(os.path.abspath(out)) or ".", exist_ok=True)
         cnt = 0
-        with _open_write(out) as o, open(os.path.join(target, part), "rb") as f:
+        with _open_by_ext(out, "wb") as o, open(os.path.join(target, part), "rb") as f:
             for line in f:
                 o.write(line)
                 cnt += 1
@@ -367,7 +352,7 @@ def op_coalesce(
             continue  # on_close_delete_if_empty parity
         out = _outpath(outfile, io.stem, auto=auto)
         os.makedirs(os.path.dirname(os.path.abspath(out)) or ".", exist_ok=True)
-        with _open_write(out) as o, open(src, "rb") as f:
+        with _open_by_ext(out, "wb") as o, open(src, "rb") as f:
             shutil.copyfileobj(f, o)
         _write_meta(out, cnt)
         auto += 1

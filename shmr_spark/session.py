@@ -58,10 +58,6 @@ def get_spark(
         # worker — the conf the multimodal module's memory contract
         # relies on (Spark default is 10000)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # lets Python DataSource readers claim filters (Spark 4.1);
-        # the shmr source's pushdown tier requires it (and hard-errors
-        # without it, hence that tier is opt-in per read)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # a training_pipeline call makes ~220 classes; at 100 each warm call recompiled (~1.8 s)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")

@@ -22,12 +22,15 @@ This source maps that model onto Spark's:
   WITH the ``.meta`` sidecar, so output datasets are valid inputs for
   the reference CLI itself (and for our compat CLI's memoized count).
 
-Options (read): ``path`` (file or glob), ``codec`` = json|csv|text
-(default json), ``skip_nrows`` (per file, default 0), ``pushdown`` =
-true|false (default false — evaluate claimed filters source-side,
-before Arrow serialization; requires
-``spark.sql.python.filterPushdown.enabled``, which ``get_spark``
-sets).
+Options (read): ``path`` (file, directory or glob), ``codec`` =
+json|csv|text (default json), ``skip_nrows`` (per file, default 0).
+The writer adds ``compression`` = gz|bz2 (default none). An unknown
+codec or compression fails at plan time.
+Listing: a glob reads its matches and a directory its entries, sorted,
+minus ``.meta`` sidecars, names starting with ``_`` or ``.``
+(``_SUCCESS``, in-progress temp files) and non-files; a file named
+outright is read as given. Filters are left to Spark, which gets every
+row.
 CSV parsing is LINE-based, matching the reference's one-record-per-
 line model (/root/reference/shmr/partition.py:126-132): RFC-4180
 quoted fields containing embedded newlines are NOT supported and
@@ -61,21 +64,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
-    EqualNullSafe,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType, _parse_datatype_string
@@ -89,10 +78,29 @@ def _open_by_ext(path: str, mode: str):
     return open(path, mode)
 
 
-def _expand(path: str) -> list[str]:
-    paths = sorted(globmod.glob(path)) if any(c in path for c in "*?[") else [path]
-    if not paths:
-        raise FileNotFoundError(f"no partition matches: {path}")
+def _list_files(path: str, allow_empty: bool = False) -> list[str]:
+    """The partition files ``path`` names, in read order: a glob's
+    matches or a directory's entries, sorted, without ``.meta``
+    sidecars, ``_``/``.``-prefixed names (``_SUCCESS`` markers,
+    in-progress temp files; Spark's file sources skip these too) and
+    non-files. A file named outright is kept as given."""
+    if any(c in path for c in "*?["):
+        found = globmod.glob(path)
+    elif os.path.isdir(path):
+        found = [os.path.join(path, n) for n in os.listdir(path)]
+    elif os.path.isfile(path):
+        return [path]
+    else:
+        found = []
+    paths = sorted(
+        p
+        for p in found
+        if not p.endswith(".meta")
+        and not os.path.basename(p).startswith(("_", "."))
+        and os.path.isfile(p)
+    )
+    if not paths and not allow_empty:
+        raise FileNotFoundError(f"no partition files at: {path}")
     return paths
 
 
@@ -187,175 +195,28 @@ def _decode_file(
             raise ValueError(f"unknown codec: {codec}")
 
 
-def _spark_cmp(v, x) -> int:
-    """Spark SQL total ordering as a -1/0/1 comparator: NaN compares
-    GREATER than every numeric and EQUAL to itself (Python's NaN
-    comparisons are all-False — using them verbatim would silently
-    change results vs the Spark-side evaluation of the same filter)."""
-    import math
+class _PartitionFiles:
+    """What the batch and stream readers share: the read options and
+    the decode loop over one task's files."""
 
-    v_nan = isinstance(v, float) and math.isnan(v)
-    x_nan = isinstance(x, float) and math.isnan(x)
-    if v_nan or x_nan:
-        if v_nan and x_nan:
-            return 0
-        return 1 if v_nan else -1
-    return (v > x) - (v < x)
-
-
-_CMP_OPS = {
-    GreaterThan: lambda v, x: _spark_cmp(v, x) > 0,
-    GreaterThanOrEqual: lambda v, x: _spark_cmp(v, x) >= 0,
-    LessThan: lambda v, x: _spark_cmp(v, x) < 0,
-    LessThanOrEqual: lambda v, x: _spark_cmp(v, x) <= 0,
-    EqualTo: lambda v, x: _spark_cmp(v, x) == 0,
-}
-
-_STR_OPS = {
-    StringStartsWith: str.startswith,
-    StringEndsWith: str.endswith,
-    StringContains: str.__contains__,
-}
-
-# NOTE: no "float" — the decode path carries full Python doubles but
-# the non-pushdown pipeline truncates float32 columns at the Arrow
-# boundary BEFORE Spark evaluates filters, so a source-side comparison
-# on the untruncated value could disagree at precision boundaries.
-# float-column filters therefore stay Spark-side.
-_SIMPLE_TYPES = frozenset(
-    ("tinyint", "smallint", "int", "bigint", "double", "string", "boolean")
-)
-
-
-def _compile_filter(f: Filter, schema: StructType):
-    """Compile a Catalyst pushed filter into a three-valued evaluator
-    ``row_tuple -> True | False | None`` (None = SQL UNKNOWN: a NULL
-    operand — the row is dropped, and under NOT stays dropped, exactly
-    Spark's semantics). Returns None if the filter is one this source
-    does not handle (it then stays Spark-side — correctness never
-    depends on the pushdown)."""
-    if isinstance(f, Not):
-        inner = _compile_filter(f.child, schema)
-        if inner is None:
-            return None
-        return lambda row: (lambda r: None if r is None else not r)(inner(row))
-
-    attr = getattr(f, "attribute", None)
-    if not isinstance(attr, tuple) or len(attr) != 1:
-        return None  # nested paths stay Spark-side
-    names = schema.fieldNames()
-    if attr[0] not in names:
-        return None
-    idx = names.index(attr[0])
-    typ = schema.fields[idx].dataType.simpleString()
-    if typ not in _SIMPLE_TYPES:
-        return None
-
-    if isinstance(f, IsNull):
-        return lambda row: row[idx] is None
-    if isinstance(f, IsNotNull):
-        return lambda row: row[idx] is not None
-
-    def _plain(v):
-        return isinstance(v, (int, float, str, bool)) and not (
-            typ == "string" and not isinstance(v, str)
-        )
-
-    if isinstance(f, In):
-        if not all(_plain(v) or v is None for v in f.value):
-            return None
-        vals = tuple(v for v in f.value if v is not None)
-        has_null = any(v is None for v in f.value)
-        # SQL IN: TRUE on match; else UNKNOWN if the probe or any list
-        # element is NULL, else FALSE
-        return lambda row: (
-            None
-            if row[idx] is None
-            else True
-            if any(_spark_cmp(row[idx], v) == 0 for v in vals)
-            else (None if has_null else False)
-        )
-    if isinstance(f, EqualNullSafe):
-        if not (_plain(f.value) or f.value is None):
-            return None
-        return lambda row: (
-            row[idx] is None and f.value is None
-        ) or (
-            row[idx] is not None
-            and f.value is not None
-            and _spark_cmp(row[idx], f.value) == 0
-        )
-    for klass, fn in _STR_OPS.items():
-        if isinstance(f, klass):
-            if typ != "string" or not isinstance(f.value, str):
-                return None
-            return lambda row, fn=fn: (
-                None if row[idx] is None else fn(row[idx], f.value)
-            )
-    for klass, fn in _CMP_OPS.items():
-        if isinstance(f, klass):
-            if not _plain(f.value):
-                return None
-            return lambda row, fn=fn: (
-                None if row[idx] is None else fn(row[idx], f.value)
-            )
-    return None
-
-
-class ShmrReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self.schema_ = schema
         self.codec = options.get("codec", "json")
         self.skip_nrows = int(options.get("skip_nrows", 0))
-        self.paths = _expand(options["path"])
-        self._pushed = []  # evaluators applied in read()
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # small files share a task (see PACK_BYTES)
-        return _pack(self.paths)
+        self.path = options["path"]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        rows = (
-            row
-            for path in partition.paths
-            for row in _decode_file(path, self.schema_, self.codec, self.skip_nrows)
-        )
-        if not self._pushed:
-            yield from rows
-            return
-        for row in rows:
-            if all(ev(row) is True for ev in self._pushed):
-                yield row
+        for path in partition.paths:
+            yield from _decode_file(path, self.schema_, self.codec, self.skip_nrows)
 
 
-class ShmrPushdownReader(ShmrReader):
-    """ShmrReader + row-level filter pushdown (Spark 4.1 Python
-    DataSource API), selected by ``.option("pushdown", "true")``.
-
-    The source decodes every line anyway (line-oriented formats have
-    no statistics layer to skip I/O), but evaluating claimed
-    predicates HERE drops rows before Arrow serialization and the
-    Python→JVM transfer — on a selective scan that is the bulk of the
-    data movement. Filters the source can't evaluate exactly (nested
-    paths, non-scalar types) are yielded back and stay Spark-side.
-
-    Opt-in rather than default because Spark 4.1 hard-errors ANY read
-    through a reader that merely implements pushFilters() while
-    ``spark.sql.python.filterPushdown.enabled`` is false — a bare
-    session must still be able to read the format. ``get_spark``
-    enables the conf, so sessions built by this repo can always opt
-    in."""
-
-    def pushFilters(self, filters: list) -> Iterator[Filter]:
-        for f in filters:
-            ev = _compile_filter(f, self.schema_)
-            if ev is None:
-                yield f
-            else:
-                self._pushed.append(ev)
+class ShmrReader(_PartitionFiles, DataSourceReader):
+    def partitions(self) -> Sequence[InputPartition]:
+        # small files share a task (see PACK_BYTES)
+        return _pack(_list_files(self.path))
 
 
-class ShmrStreamReader(DataSourceStreamReader):
+class ShmrStreamReader(_PartitionFiles, DataSourceStreamReader):
     """Incremental ingest of a GROWING reference partition directory —
     ``spark.readStream.format("shmr")`` turns the reference's batch
     file model into a Structured Streaming source: each micro-batch
@@ -379,26 +240,9 @@ class ShmrStreamReader(DataSourceStreamReader):
     be read short.
     """
 
-    def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.codec = options.get("codec", "json")
-        self.skip_nrows = int(options.get("skip_nrows", 0))
-        self.path = options["path"]
-
     def _files(self) -> list[str]:
-        pattern = self.path
-        if not any(c in pattern for c in "*?["):
-            # directory → the reference's default dataset layout
-            pattern = os.path.join(pattern, "*")
-        # .meta sidecars, _SUCCESS markers and in-progress temp files
-        # are not records (Spark's file sources skip "_"/"." names too)
-        return sorted(
-            p
-            for p in globmod.glob(pattern)
-            if not p.endswith(".meta")
-            and not os.path.basename(p).startswith(("_", "."))
-            and os.path.isfile(p)
-        )
+        # an empty or not-yet-filled directory is an empty stream
+        return _list_files(self.path, allow_empty=True)
 
     def initialOffset(self) -> dict:
         return {"hw": "", "n": 0}
@@ -448,10 +292,6 @@ class ShmrStreamReader(DataSourceStreamReader):
         # atomic-rename arrival fixes file sizes, so a replay packs alike
         return _pack(batch)
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        for path in partition.paths:
-            yield from _decode_file(path, self.schema_, self.codec, self.skip_nrows)
-
     def commit(self, end: dict) -> None:
         pass
 
@@ -488,9 +328,15 @@ def _meta_path(datafile: str) -> str:
     return os.path.splitext(datafile)[0] + ".meta"
 
 
+def _write_meta(datafile: str, n: int) -> None:
+    """The ``.meta`` sidecar: the reference's count memo,
+    ``{"n_records": N}``."""
+    with open(_meta_path(datafile), "w") as m:
+        json.dump({"n_records": n}, m)
+
+
 class ShmrWriter(DataSourceWriter):
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        import glob as g
         import time
         import uuid
 
@@ -505,7 +351,7 @@ class ShmrWriter(DataSourceWriter):
         self.token = f"{time.time_ns():016x}{uuid.uuid4().hex[:4]}"
         if overwrite and os.path.isdir(self.path):
             # driver-side (this runs before any task): clear prior data
-            for f in g.glob(os.path.join(self.path, "part-*")) + g.glob(
+            for f in globmod.glob(os.path.join(self.path, "part-*")) + globmod.glob(
                 os.path.join(self.path, "_SUCCESS")
             ):
                 os.remove(f)
@@ -544,10 +390,7 @@ class ShmrWriter(DataSourceWriter):
                 g.write(line + b"\n")
                 n += 1
         os.replace(tmp, out)  # atomic publish; duplicate attempts converge
-        # .meta sidecar — the reference's count memo
-        # (/root/reference/shmr/partition_writer.py:64-85)
-        with open(_meta_path(out), "w") as m:
-            json.dump({"n_records": n}, m)
+        _write_meta(out, n)
         return _WroteFile(out, n)
 
     def commit(self, messages) -> None:
@@ -556,8 +399,6 @@ class ShmrWriter(DataSourceWriter):
             json.dump({"n_records": total, "n_files": len(messages)}, f)
 
     def abort(self, messages) -> None:
-        import glob as g
-
         for m in messages:
             if m is None:
                 continue
@@ -567,7 +408,8 @@ class ShmrWriter(DataSourceWriter):
         # token-scoped: never sweep up live temp files of a concurrent
         # append job (temp names embed this job's token via the final
         # filename: .inprogress-<attempt>-part-NNNNN-<token>.<ext>)
-        for tmp in g.glob(os.path.join(self.path, f".inprogress-*-{self.token}.*")):
+        pattern = f".inprogress-*-{self.token}.*"
+        for tmp in globmod.glob(os.path.join(self.path, pattern)):
             os.remove(tmp)
 
 
@@ -579,13 +421,13 @@ class ShmrDataSource(DataSource):
         return "shmr"
 
     def schema(self):
-        codec = self.options.get("codec", "json")
+        codec = self._checked_options().get("codec", "json")
         if codec == "text":
             return "value string"
         if codec == "json":
             # driver-side inference from a bounded sample of the first
             # file (explicit schemas are the production path)
-            first = _expand(self.options["path"])[0]
+            first = _list_files(self.options["path"])[0]
             keys: dict[str, str] = {}
             with _open_by_ext(first, "rb") as f:
                 for _ in range(int(self.options.get("skip_nrows", 0))):
@@ -637,22 +479,34 @@ class ShmrDataSource(DataSource):
             return ", ".join(f"{k} {t}" for k, t in keys.items())
         raise ValueError(f"codec {codec} requires an explicit schema")
 
+    def _checked_options(self) -> dict:
+        """The options, with codec and compression checked here, at plan
+        time: a bad codec would otherwise fail only inside a task, and
+        a bad compression would write uncompressed files under its
+        name."""
+        options = dict(self.options)
+        for key, default, allowed in (
+            ("codec", "json", ("json", "csv", "text")),
+            ("compression", "", ("", "gz", "bz2")),
+        ):
+            if options.get(key, default) not in allowed:
+                raise ValueError(
+                    f"unknown {key} {options[key]!r}: use one of "
+                    + ", ".join(repr(a) for a in allowed)
+                )
+        return options
+
     def reader(self, schema) -> ShmrReader:
         if isinstance(schema, str):
             schema = _parse_datatype_string(schema)
-        cls = (
-            ShmrPushdownReader
-            if str(self.options.get("pushdown", "false")).lower() == "true"
-            else ShmrReader
-        )
-        return cls(schema, dict(self.options))
+        return ShmrReader(schema, self._checked_options())
 
     def writer(self, schema, overwrite: bool) -> ShmrWriter:
         if isinstance(schema, str):
             schema = _parse_datatype_string(schema)
-        return ShmrWriter(schema, dict(self.options), overwrite)
+        return ShmrWriter(schema, self._checked_options(), overwrite)
 
     def streamReader(self, schema) -> ShmrStreamReader:
         if isinstance(schema, str):
             schema = _parse_datatype_string(schema)
-        return ShmrStreamReader(schema, dict(self.options))
+        return ShmrStreamReader(schema, self._checked_options())

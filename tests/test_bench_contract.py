@@ -24,19 +24,6 @@ if str(REPO) not in sys.path:
 from bench import compact_summary, scale_extra_rows  # noqa: E402
 from shmr_spark.queries import load_all  # noqa: E402
 
-# Synthetic stand-ins for bench.scale_extra_rows' row names.
-# These pad only result fields compact_summary DROPS (scale_check's
-# per-query maps), so they cannot move the tested line length today —
-# they exist so that if the compact shape ever starts carrying
-# per-extra fields, the bound test is already exercising a
-# larger-than-current extras set (count > the ~8 bench actually adds,
-# names longer than its longest). Deliberately NOT a mirror of
-# bench.py's real names: a hand-synced copy would silently go stale;
-# a deliberately-synthetic superset cannot.
-_BENCH_LOCAL_EXTRAS = [
-    f"synthetic_scale_extra_with_a_very_long_name_{i:02d}" for i in range(12)
-]
-
 # the driver's capture window is ~2000 chars of stdout tail; the final
 # line must fit with margin even after a trailing newline and any
 # incidental short line the runtime appends
@@ -49,7 +36,18 @@ def _largest_realistic_result() -> dict:
     assert headline, "registry lost its headline set"
     # worst-case magnitudes: three-digit seconds with three decimals
     timings = {n: 999.999 for n in headline}
-    extras = {n: 9999.999 for n in headline + _BENCH_LOCAL_EXTRAS}
+    # Synthetic stand-ins for bench.scale_extra_rows' row names: one
+    # more name than it returns, each longer than its longest. They pad
+    # only fields compact_summary DROPS (scale_check's per-query maps),
+    # so they cannot move the tested line length today; if the compact
+    # shape ever carries per-extra fields, the bound already covers a
+    # larger extras set than bench has.
+    real = scale_extra_rows(registry, {})
+    width = max(map(len, real)) + 1
+    synthetic = [
+        f"synthetic_extra_{i:02d}_".ljust(width, "x") for i in range(len(real) + 1)
+    ]
+    extras = {n: 9999.999 for n in headline + synthetic}
     return {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),

@@ -97,25 +97,51 @@ def test_file_of_pack_bytes_gets_its_own_task(registered, tmp_path):
     assert back.count() == 3 + PACK_BYTES // 64
 
 
-def test_pushdown_over_packed_task_matches_plain_read(registered, tmp_path):
+def test_reads_own_output_by_directory_and_glob(registered, tmp_path):
+    """The writer's output directory reads back as exactly the written
+    rows and schema through the directory and through ``dir/*``, with
+    and without a schema: its ``.meta`` sidecars and ``_SUCCESS`` marker
+    are neither rows nor inference input."""
     spark = registered
-    for i in range(4):
-        _write_lines(
-            tmp_path / f"part-{i:05d}.json",
-            [{"x": i * 10 + j, "s": None if j == 2 else f"s{j}"} for j in range(6)],
-        )
+    out = str(tmp_path / "ds")
+    written = spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) / 4 AS v")
+    written.repartition(2).write.format("shmr").mode("append").save(out)
+    want = sorted(map(tuple, written.collect()))
+    for path in (out, out + "/*"):
+        for schema in ("id bigint, v double", None):
+            r = spark.read.format("shmr")
+            back = (r.schema(schema) if schema else r).load(path)
+            assert back.dtypes == written.dtypes, (path, schema)
+            assert sorted(map(tuple, back.collect())) == want, (path, schema)
 
-    def rd(push):
-        r = spark.read.format("shmr").schema("x bigint, s string")
-        if push:
-            r = r.option("pushdown", "true")
-        return r.load(str(tmp_path / "part-*.json"))
 
-    assert rd(True).rdd.getNumPartitions() == 1
-    for p in ["x > 12", "s IS NULL", "NOT (x IN (1, 21, 33))", "s LIKE 's1%'"]:
-        pushed = sorted(map(tuple, rd(True).filter(p).collect()), key=repr)
-        plain = sorted(map(tuple, rd(False).filter(p).collect()), key=repr)
-        assert pushed == plain and pushed, f"pushdown diverged on {p!r}"
+@pytest.mark.parametrize(
+    "method, key, value",
+    [
+        ("writer", "compression", "gzip"),
+        ("writer", "codec", "parquet"),
+        ("reader", "codec", "parquet"),
+        ("streamReader", "codec", "parquet"),
+    ],
+)
+def test_unknown_codec_or_compression_fails_at_plan_time(
+    registered, tmp_path, method, key, value
+):
+    """An unknown codec or compression is refused when the plan is
+    made, naming the allowed values, before any file is written or
+    read."""
+    allowed = {"codec": "'json', 'csv', 'text'", "compression": "'', 'gz', 'bz2'"}[key]
+    match = f"unknown {key} '{value}': use one of {allowed}"
+    out = str(tmp_path / "out")
+    source = ShmrDataSource({"path": out, key: value})
+    args = ("x bigint", False) if method == "writer" else ("x bigint",)
+    with pytest.raises(ValueError, match=match):
+        getattr(source, method)(*args)
+    if method == "writer":
+        df = registered.range(3).selectExpr("id AS x")
+        with pytest.raises(Exception, match=match):
+            df.write.format("shmr").option(key, value).mode("append").save(out)
+        assert not os.path.exists(out)
 
 
 def test_json_schema_inference(registered, tmp_path):
@@ -565,104 +591,3 @@ def test_stream_pipeline_checkpoint_restart_exactly_once(registered, tmp_path):
         assert {200, 201, 202} <= got
     finally:
         q.stop()
-
-
-@pytest.mark.heavy  # slow evidence re-derivation; run via `pytest -m heavy` each round
-def test_pushdown_filters_match_spark_side_evaluation(registered, tmp_path):
-    """The pushdown tier must be semantics-invisible: every filter
-    evaluated source-side (incl. three-valued NULL logic under NOT /
-    IN) returns exactly the rows the plain reader + Spark-side filter
-    returns on the same data."""
-    import json as jsonmod
-
-    spark = registered
-    d = tmp_path / "push"
-    d.mkdir()
-    recs = [
-        {"x": 1, "s": "apple"},
-        {"x": 2, "s": "banana"},
-        {"x": None, "s": "pear"},
-        {"x": 5, "s": None},
-        {"x": 7, "s": "plum"},
-        {"x": -3, "s": ""},
-        {"x": None, "s": None},
-    ]
-    with open(d / "part-00000.json", "w") as f:
-        for r in recs:
-            f.write(jsonmod.dumps(r) + "\n")
-
-    def rd(push):
-        r = spark.read.format("shmr").schema("x bigint, s string")
-        if push:
-            r = r.option("pushdown", "true")
-        return r.load(str(d / "part-*.json"))
-
-    predicates = [
-        "x > 1",
-        "NOT (x > 1)",
-        "x IN (2, 7)",
-        "NOT (x IN (2, 7))",
-        "x IS NULL",
-        "s IS NOT NULL",
-        "s <=> NULL",
-        "s LIKE 'p%'",
-        "s LIKE '%m'",
-        "s LIKE '%an%'",
-        "x >= 2 AND x <= 5",
-        "x = 5 OR s = 'apple'",  # OR: not pushable, stays Spark-side
-    ]
-    for p in predicates:
-        pushed = sorted(map(tuple, rd(True).filter(p).collect()), key=repr)
-        plain = sorted(map(tuple, rd(False).filter(p).collect()), key=repr)
-        assert pushed == plain, f"pushdown diverged on {p!r}"
-
-    # doubles incl. NaN: Spark orders NaN greater than everything and
-    # NaN == NaN — the pushed evaluator must agree, not Python's
-    # all-False NaN comparisons (separate directory: its own schema)
-    dn = tmp_path / "push_nan"
-    dn.mkdir()
-    with open(dn / "part-00000.json", "w") as f:
-        for v in [1.5, float("nan"), -2.0, None]:
-            f.write(jsonmod.dumps({"y": v}) + "\n")
-
-    def rd_d(push):
-        r = spark.read.format("shmr").schema("y double")
-        if push:
-            r = r.option("pushdown", "true")
-        return r.load(str(dn / "part-*.json"))
-
-    for p in ["y > 1.0", "y <= 1.5", "NOT (y > 1.0)", "y = CAST('NaN' AS DOUBLE)"]:
-        # repr-compare: Python's nan != nan would fail tuple equality
-        pushed = sorted(repr(tuple(r)) for r in rd_d(True).filter(p).collect())
-        plain = sorted(repr(tuple(r)) for r in rd_d(False).filter(p).collect())
-        assert pushed == plain, f"NaN pushdown diverged on {p!r}"
-    # the NaN row itself must survive y > 1.0 (NaN is largest in Spark)
-    import math
-
-    kept = [r.y for r in rd_d(True).filter("y > 1.0").collect()]
-    assert any(isinstance(v, float) and math.isnan(v) for v in kept)
-
-
-def test_pushdown_appears_in_plan_and_cuts_transfer(registered, tmp_path):
-    import json as jsonmod
-
-    spark = registered
-    d = tmp_path / "push_plan"
-    d.mkdir()
-    with open(d / "part-00000.json", "w") as f:
-        for i in range(100):
-            f.write(jsonmod.dumps({"x": i}) + "\n")
-    df = (
-        spark.read.format("shmr")
-        .schema("x bigint")
-        .option("pushdown", "true")
-        .load(str(d / "part-*.json"))
-        .filter("x > 90")
-    )
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PushedFilters" in plan and "GreaterThan(x,90)" in plan
-    assert df.count() == 9
