@@ -25,9 +25,13 @@ so Catalyst optimizes; opaque-fn compat tier kept separate; no
 collect() in operator paths; AQE-friendly; 100 TB-scale hygiene.
 """
 
-from shmr_spark.session import get_spark
-from shmr_spark.catalog import load_table, load_tables
-from shmr_spark.dataset import Dataset
+from shmr_spark.pyship import skip_unchanged_zip_rereads
+
+skip_unchanged_zip_rereads()
+
+from shmr_spark.session import get_spark  # noqa: E402
+from shmr_spark.catalog import load_table, load_tables  # noqa: E402
+from shmr_spark.dataset import Dataset  # noqa: E402
 
 __version__ = "0.1.0"
 
