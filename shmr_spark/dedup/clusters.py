@@ -14,7 +14,8 @@ Converges in O(diameter) rounds. Scale hygiene:
 - edges are symmetrized once; each round is one join + one agg —
   both shuffle on the node id, so a cluster-by-cluster skew is spread
   over hash partitions, not one reducer;
-- ``localCheckpoint`` each round cuts the lineage chain that would
+- the symmetrized edges and each round's labels are pinned
+  (``session.materialize``), which cuts the lineage chain that would
   otherwise grow the plan exponentially and overwhelm the optimizer —
   THE classic iterative-Spark failure mode;
 - the driver-side loop runs one tiny count per round (the
@@ -26,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from shmr_spark.session import materialize
+
 
 def connected_components(
     pairs: DataFrame,
@@ -35,17 +38,15 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``;
     component = min node id in the connected component."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iterations):
         neighbor_min = (
@@ -54,23 +55,21 @@ def connected_components(
             .agg(F.min("comp").alias("nmin"))
         )
         # carry the round's old label alongside the new one so the
-        # convergence check is a filter over THIS round's checkpoint
+        # convergence check is a filter over THIS round's pinned frame
         # — the previous new⋈old labels join per round
         # shuffled the label table twice per iteration just to count
         # changes (measured at sf0.1 pipeline pairs: 1.10 → 0.90 s
         # min over the whole CC, r12 optimization)
-        # lazy checkpoint + count: the convergence count's job is what
-        # materializes the round's checkpoint (localCheckpoint persists
-        # partitions on first computation), so each round runs ONE job
-        # instead of an eager-checkpoint job plus a count job
-        staged = (
+        # the pin is lazy: the convergence count's job is what computes
+        # and keeps the round's labels, so each round runs ONE job
+        # instead of a materializing job plus a count job
+        staged = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
                 F.col("comp").alias("__prev"),
                 F.least(F.col("comp"), F.coalesce("nmin", F.col("comp"))).alias("comp"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = staged.filter(F.col("comp") != F.col("__prev")).count()
         labels = staged.select("node", "comp")

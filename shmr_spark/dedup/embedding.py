@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from shmr_spark.functions.vectors import dot, l2_norm, sql_double_array, sql_ident
+from shmr_spark.session import materialize
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
@@ -85,16 +86,18 @@ def embedding_near_duplicates(
     r=1 recovers all pairs differing on a single hyperplane sign —
     most of the loss at practical n_planes."""
     planes = hyperplanes(dim, n_planes, seed)
-    bucketed = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        # norm precomputed per ROW, not per PAIR: the verify cosine
-        # then costs one dot per candidate pair instead of dot + two
-        # norms (3d → d flops) — same operand order as
-        # cosine_similarity, so values are bit-identical
-        l2_norm(vec_col).alias("__n"),
-        lsh_bucket(vec_col, planes).alias("__bucket"),
-    ).localCheckpoint(eager=False)  # bucket dots reused by both join sides
+    bucketed = materialize(  # bucket dots reused by both join sides
+        df.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).alias("__v"),
+            # norm precomputed per ROW, not per PAIR: the verify cosine
+            # then costs one dot per candidate pair instead of dot + two
+            # norms (3d → d flops) — same operand order as
+            # cosine_similarity, so values are bit-identical
+            l2_norm(vec_col).alias("__n"),
+            lsh_bucket(vec_col, planes).alias("__bucket"),
+        )
+    )
     a = bucketed
     if multiprobe_hamming > 0:
         from shmr_spark.similarity.knn import _neighbor_buckets

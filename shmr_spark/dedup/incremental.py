@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from shmr_spark.functions.hashing import fingerprint_md5
+from shmr_spark.session import materialize
 
 
 def incremental_dedup_exact(
@@ -113,7 +114,7 @@ def incremental_dedup_minhash(
         F.when(F.col("__is_new"), F.lit("n:")).otherwise(F.lit("s:")),
         F.col("__id").cast("string"),
     ).alias("__uid")
-    sh_all = (
+    sh_all = materialize(
         batch.withColumn("__is_new", F.lit(True))
         .unionByName(state.withColumn("__is_new", F.lit(False)))
         .select(
@@ -128,7 +129,6 @@ def incremental_dedup_minhash(
                 shingle_ngrams("__t", shingle_size), lambda s: F.xxhash64(s)
             ).alias("__sh"),
         )
-        .localCheckpoint(eager=False)
     )
     sigs = minhash_signatures_df(sh_all, "__uid", "__sh", num_hashes)
     meta = sh_all.select("__uid", "__id", "__is_new")

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shmr_spark.session import materialize
+
 
 def shingle_ngrams(text: Column | str, n: int = 3) -> Column:
     """Distinct token n-gram shingles of a text column, as
@@ -152,12 +154,13 @@ def band_rows(
     bands: int = 16,
 ) -> DataFrame:
     """(__id, band, bh) rows — ``bands`` small rows per document, the
-    join-ready LSH band table. Materialized (localCheckpoint) because
-    every consumer joins it at least twice and the signature
-    expression is the expensive part; the banded table itself is tiny
-    (~20 bytes × bands per doc). This is also the table an
-    append-only near-dup STATE persists (bucketed by (band, bh)) so
-    ingest batches join against it without recomputing history."""
+    join-ready LSH band table (~20 bytes × bands per doc). Not pinned:
+    the band self-join's two sides shuffle the same plan on the same
+    keys, so Spark reuses one exchange for both, and
+    minhash_candidate_pairs pins the candidate pairs it yields. This
+    is also the table an append-only near-dup STATE persists
+    (bucketed by (band, bh)) so ingest batches join against it
+    without recomputing history."""
     r = F.floor(F.size(sig_col) / bands).cast("int")
     return (
         df.select(
@@ -175,7 +178,6 @@ def band_rows(
             ).alias("bb"),
         )
         .select("__id", "bb.band", "bb.bh")
-        .localCheckpoint(eager=False)
     )
 
 
@@ -220,8 +222,8 @@ def minhash_candidate_pairs(
     pinned lineage and candidates is the distinct banded pair set.
     Split out so a caller measuring banding selectivity (bench's
     candidate/verified pair counts) can act on the candidate frame
-    AND feed the same frame to the verify stage — both lineages pin
-    at the shared localCheckpoints, so the shingle→signature→band
+    AND feed the same frame to the verify stage — both frames are
+    pinned (``session.materialize``), so the shingle→signature→band
     pipeline runs once per session, not once per consumer.
 
     The shared shingle frame carries xxhash64(shingle) longs, not the
@@ -233,16 +235,12 @@ def minhash_candidate_pairs(
     verify join's pair exchange ships 8 bytes per shingle instead of
     a ~25-byte n-gram — measured at the 100× corpus: total exchange
     13.34 → 8.96 GB, wall 203 → 153 s (AUDIT_100X_LLM.json)."""
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        F.transform(
-            shingle_ngrams(text_col, shingle_size), lambda s: F.xxhash64(s)
-        ).alias("__sh"),
-    ).localCheckpoint(eager=False)  # reused by signatures AND both verify sides
+    hashed = F.transform(shingle_ngrams(text_col, shingle_size), lambda s: F.xxhash64(s))
+    # reused by signatures AND both verify sides
+    sh = materialize(df.select(F.col(id_col).alias("__id"), hashed.alias("__sh")))
     sigs = minhash_signatures_df(sh, "__id", "__sh", num_hashes)
-    cands = lsh_candidates(sigs, "__id", "sig", bands).localCheckpoint(
-        eager=False
-    )  # reused by a selectivity count AND the verify join
+    # reused by a selectivity count AND the verify join
+    cands = materialize(lsh_candidates(sigs, "__id", "sig", bands))
     return sh, cands
 
 

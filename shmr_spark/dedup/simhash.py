@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shmr_spark.session import materialize
+
 # Nested higher-order functions are expressed via SQL strings: the
 # inner lambda captures the outer lambda's variable, which the Python
 # Column lambda API cannot express.
@@ -87,9 +89,8 @@ def simhash_near_duplicates(
     (e.g. simhash60_md5 for the cross-engine driver gate); the
     blocking and verify machinery is identical."""
     sig_col = signature if signature is not None else simhash64(text_col)
-    sigs = df.select(
-        F.col(id_col).alias("__id"), sig_col.alias("sig")
-    ).localCheckpoint(eager=False)  # the chunk self-join reuses both sides
+    # the chunk self-join reuses both sides
+    sigs = materialize(df.select(F.col(id_col).alias("__id"), sig_col.alias("sig")))
     chunked = sigs.select(
         "__id",
         "sig",

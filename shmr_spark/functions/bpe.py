@@ -32,6 +32,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shmr_spark.session import materialize
+
 
 def word_counts(
     docs: DataFrame, text_col: str = "text", min_len: int = 2
@@ -99,9 +101,9 @@ def train_bpe(
     vocab-sized symbol table and collects one row."""
     wc = word_counts(docs, text_col)
     syms = wc.select(_char_split(F.col("word")).alias("syms"), "n")
-    # the symbol table is re-derived num_merges times; checkpoint the
-    # lineage each round so plans don't nest
-    syms = syms.localCheckpoint(eager=True)
+    # the symbol table is re-derived num_merges times; pin it each
+    # round so plans don't nest
+    syms = materialize(syms)
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         top = (
@@ -114,10 +116,9 @@ def train_bpe(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        syms = (
+        syms = materialize(
             syms.select(_merge_fold(a, b).alias("syms"), "n")
             .filter(F.size("syms") >= 2)
-            .localCheckpoint(eager=True)
         )
     return merges
 

@@ -6,9 +6,9 @@ Scale design: each iteration is ONE shuffle-join of edges with the
 current rank vector on src (co-partitioned after the first round —
 AQE reuses the exchange) plus one map-side-combinable aggregate on
 dst. Rank state is (node, double) — 16 bytes/vertex. Lineage is
-truncated per round with a lazy localCheckpoint, the same pattern as
-the connected-components loop (dedup/clusters.py); without it the
-plan doubles per iteration.
+truncated per round by pinning the ranks (``session.materialize``), the
+same pattern as the connected-components loop (dedup/clusters.py);
+without it the plan doubles per iteration.
 
 Determinism discipline (what lets a float iteration carry a DuckDB
 hash oracle): ranks are QUANTIZED TO 6 DECIMALS (dquant — engine-identical
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from shmr_spark.functions.numeric import dquant, dsum
+from shmr_spark.session import materialize
 
 
 def pagerank(
@@ -80,7 +81,7 @@ def pagerank(
                 F.lit(base) + F.lit(damping) * F.coalesce("__in", F.lit(0.0))
             ).alias("rank"),
         )
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = materialize(ranks)
     return ranks
 
 
@@ -102,7 +103,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     endpoint pair); no cross products, and the degree join is itself
     an aggregate small enough for the planner to place.
     """
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
@@ -110,9 +111,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
         # referenced by deg (twice, via the two renames) and keyed —
-        # truncate lineage so the (possibly expensive) edge projection
-        # is pinned once, same discipline as pagerank above
-        .localCheckpoint(eager=False)
+        # pin the (possibly expensive) edge projection once
     )
     deg = (
         e.select(F.col("lo").alias("v"))
@@ -127,15 +126,17 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     lo_first = F.struct(F.col("dl"), F.col("lo")) < F.struct(F.col("dh"), F.col("hi"))
     # oriented edge u→w with T(u) < T(w); carry the head's T-key so the
     # wedge filter below needs no extra join
-    out = keyed.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("w"),
-        F.when(
-            lo_first, F.struct(F.col("dh").alias("d"), F.col("hi").alias("k"))
+    out = materialize(  # consumed by ab, ac AND closing
+        keyed.select(
+            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
+            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("w"),
+            F.when(
+                lo_first, F.struct(F.col("dh").alias("d"), F.col("hi").alias("k"))
+            )
+            .otherwise(F.struct(F.col("dl").alias("d"), F.col("lo").alias("k")))
+            .alias("tw"),
         )
-        .otherwise(F.struct(F.col("dl").alias("d"), F.col("lo").alias("k")))
-        .alias("tw"),
-    ).localCheckpoint(eager=False)  # consumed by ab, ac AND closing
+    )
     ab = out.select(F.col("u"), F.col("w").alias("y"), F.col("tw").alias("ty"))
     ac = out.select(F.col("u"), F.col("w").alias("z"), F.col("tw").alias("tz"))
     closing = out.select(F.col("u").alias("y"), F.col("w").alias("z"))

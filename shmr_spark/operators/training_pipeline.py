@@ -16,9 +16,9 @@ are small bounded aggregates over the persisted survivors (token
 total, max doc id and per-bucket token totals), taken at the point a
 production build writes to storage: they size the pack/shard buckets
 and turn the budget cut into literals, so later actions do not re-run
-those sub-plans. The selection is lazily checkpointed as well, so the
-first action over the result also runs the selection's shuffle
-stages, once, when that checkpoint is taken.
+those sub-plans. The selection is pinned as well
+(``session.materialize``), so the first action over the result also
+runs the selection's shuffle stages, once, when the pin is taken.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ from shmr_spark.operators.selection import (
     score_bucket,
     select_by_token_fraction_from_totals,
 )
+from shmr_spark.session import materialize
 
 # Frames persisted by the last call for each (application, corpus,
 # params) slot. A call releases its slot's previous frames before its
@@ -292,12 +293,11 @@ def training_pipeline(
             [(r["__bucket"], r["__btot"]) for r in bucket_rows],
             fraction=budget_fraction,
         )
-    # Lazily checkpoint the selection: pack_sequences and range_shards
-    # each scan their input twice, so without it Catalyst re-analyzes
-    # and re-runs the selection lineage under every one of those
-    # references on every action. The checkpoint truncates the logical
-    # plan here; rows are identical.
-    sel = sel.localCheckpoint(eager=False)
+    # Pin the selection: pack_sequences and range_shards each scan
+    # their input twice, so without it Catalyst re-analyzes and re-runs
+    # the selection lineage under every one of those references on
+    # every action. Rows are identical.
+    sel = materialize(sel)
     id_width = max(1, int(max_doc_id) // 4096 + 1)
     doc_bucket = F.floor(F.col("doc_id") / F.lit(id_width)).cast("long")
 

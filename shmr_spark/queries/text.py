@@ -31,6 +31,7 @@ from shmr_spark.functions.text import (
     LANG_MARKERS,
 )
 from shmr_spark.queries import query
+from shmr_spark.session import materialize
 
 # --------------------------------------------------------------------------
 # Per-language corpus stats.
@@ -1659,20 +1660,19 @@ def perplexity_buckets(spark, sf_dir):
     # at the 10x corpus), while the join moves two one-row-per-DOC
     # relations (~2 MB) — the join wins whenever docs average more
     # than a couple of bigrams, i.e. always
-    scored = (
+    scored = materialize(
         bigram_lm_scores(docs)
         .select("doc_id", "avg_neg_logp")
         .join(docs.select("doc_id", "lang"), "doc_id")
         # grouped_ntile takes THREE passes over its input per action
         # (auto-bucket min/max, bucket totals, the ranked probe), and
         # each re-inlined the whole bigram-LM sub-plan: 158-Exchange
-        # plan, the LM explode executed repeatedly. The lazy local
-        # checkpoint (the spans/graph idiom) truncates the lineage so
-        # the LM runs once per action and the ntile machinery scans
-        # the 3-column materialization. Measured (r12 optimization):
-        # 2.45 -> 1.93 s at sf0.1, min 5.9 -> 4.8 s at 10x; output
-        # row-identical (oracle hash-match re-verified at three SFs).
-        .localCheckpoint(eager=False)
+        # plan, the LM explode executed repeatedly. The pin truncates
+        # the lineage so the LM runs once per action and the ntile
+        # machinery scans the 3-column materialization.
+        # Measured (r12 optimization): 2.45 -> 1.93 s at sf0.1, min
+        # 5.9 -> 4.8 s at 10x; output row-identical (oracle hash-match
+        # re-verified at three SFs).
     )
     tiled = grouped_ntile(
         scored, ["lang"], "avg_neg_logp", "doc_id", 3, tile_col="ppl_bucket"

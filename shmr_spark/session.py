@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -76,3 +76,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Pin ``df``: the one place the engine cuts a frame's lineage.
+
+    A frame is pinned when several consumers read it (both sides of a
+    self-join, a count and a join, every pass of a multi-scan
+    operator) and its sub-plan is the expensive part, or when an
+    iterative loop would otherwise nest its plan one level per round.
+    Later actions then read the computed rows instead of re-planning
+    and re-running the sub-plan. A self-join whose two sides shuffle
+    the same plan on the same keys needs no pin: Spark reuses one
+    exchange for both.
+
+    The pin is lazy: the first action over the frame computes and
+    keeps it. Under AQE, building the frame already runs the shuffle
+    stages beneath it.
+
+    Where the rows are kept follows Spark's own deployment setting
+    ``spark.checkpoint.dir``. Without it, the blocks stay on the
+    executor that computed them (``localCheckpoint``), which is fast,
+    but the loss of that executor fails the next action that reads
+    them. With it, they are written to that directory (``checkpoint``)
+    and survive executor loss, at the cost of one extra job per frame
+    that recomputes the partitions to write them. Set it on a cluster.
+    Because of that recompute, only deterministic frames are pinned.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)

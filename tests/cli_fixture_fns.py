@@ -56,47 +56,6 @@ def by_x(rec: dict) -> int:
     return rec["x"]
 
 
-def get_id_field(rec: dict) -> dict:
-    """Head-to-head bench fn (tools/bench_vs_reference.py): project
-    two fields from an ND-JSON record."""
-    return {"id": rec["id"], "age": rec["age"]}
-
-
-def age_of(rec: dict) -> int:
-    return rec["age"]
-
-
-def count_by_age(rec: dict, accum: dict | None = None) -> dict:
-    """reduce_by_key accumulator: {'age': k, 'n': count} per key
-    (the reference's accumulator must carry its own key)."""
-    if accum is None:
-        return {"age": rec["age"], "n": 1}
-    accum["n"] += 1
-    return accum
-
-
-def id_mod100k(rec: dict) -> int:
-    return rec["id"] % 100000
-
-
-def count_by_id_mod(rec: dict, accum: dict | None = None) -> dict:
-    if accum is None:
-        return {"k": rec["id"] % 100000, "n": 1}
-    accum["n"] += 1
-    return accum
-
-
-def key_of_k(rec: dict) -> int:
-    return rec["k"]
-
-
-def merge_counts(rec: dict, accum: dict | None = None) -> dict:
-    if accum is None:
-        return {"k": rec["k"], "n": rec["n"]}
-    accum["n"] += rec["n"]
-    return accum
-
-
 # -- fuzz-differential fns (tests/test_differential_reference.py):
 # 2-column rows [text, int-as-str] generated by hypothesis
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from shmr_spark.dedup.clusters import (
@@ -79,3 +80,40 @@ def test_keep_best_in_cluster_picks_quality_not_id(spark):
         for r in dedup_keep_cluster_representative(docs, pairs).collect()
     }
     assert minid == {1, 7, 9}
+
+
+def _min_id_components(edges):
+    """Pure-Python union-find; every root is its component's min id."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.data())
+def test_random_graphs_match_union_find(spark, data):
+    """Labels equal the min id per component on random edge lists with
+    self-loops, duplicate and reversed edges, isolated pairs, and a
+    shuffled chain of up to 12 nodes that needs several rounds."""
+    node = st.integers(0, 40)
+    edges = data.draw(st.lists(st.tuples(node, node), max_size=25))
+    chain = data.draw(st.permutations(range(50, 50 + data.draw(st.integers(2, 12)))))
+    edges += list(zip(chain, chain[1:]))
+    isolated = data.draw(st.lists(st.integers(100, 200), max_size=5, unique=True))
+    edges += [(a, a + 1000) for a in isolated]
+    edges += data.draw(st.lists(st.sampled_from(edges), max_size=8))
+    edges += [(b, a) for a, b in data.draw(st.lists(st.sampled_from(edges), max_size=8))]
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.comp for r in connected_components(pairs).collect()}
+    assert got == _min_id_components(edges)

@@ -21,9 +21,9 @@ The walk reads ``.schema`` off each query's DataFrame. For purely
 declarative queries that is plan analysis only — milliseconds. But a
 query whose BODY runs driver actions (streaming replays via
 run_stream_to_memory, apply_side_effect's foreach, centroid/probe
-collects, iterative rounds with localCheckpoint) executes those
+collects, iterative rounds over pinned frames) executes those
 actions just to produce the DataFrame. Those are enumerated in
-ACTION_RUNNING below — an explicit inventory of which gates run real
+ACTION_RUNNING below — an exact inventory of which gates run real
 work during schema derivation — and every query gets a per-query
 watchdog so one hanging or environment-sensitive body fails by NAME
 instead of stalling the whole suite silently (round-5 advice)."""
@@ -42,9 +42,9 @@ FORBIDDEN = (T.ArrayType, T.MapType, T.StructType, T.DecimalType)
 # Queries whose bodies legitimately run driver actions while BUILDING
 # their result DataFrame (not merely when the caller acts on it), and
 # the action class each runs. Everything else must derive its schema
-# via plan analysis only — ENFORCED below via a per-query job group +
-# statusTracker check (round 8; previously advisory, which let a fast
-# unlisted action slip through), on top of the hang watchdog.
+# via plan analysis only, and every listed gate must run at least one
+# job — both ENFORCED below via a per-query job group + statusTracker
+# check, on top of the hang watchdog.
 ACTION_RUNNING: dict[str, str] = {
     # full Structured Streaming replays to a memory sink
     "streaming_tumbling": "stream replay",
@@ -61,34 +61,27 @@ ACTION_RUNNING: dict[str, str] = {
     "similarity_pq_topk": "1-row probe collect",
     "similarity_indexed_topk": "index build/load + probe collect",
     "similarity_quantized_rerank": "footer count",
-    "dedup_semantic": "k-means centroid collects",
-    "label_centroids": "k-means centroid collects",
-    # iterative bodies: per-round actions (localCheckpoint, counts,
+    # iterative bodies: per-round actions (pinned frames, counts,
     # 1-row merge winners)
     "dedup_corpus_neardup": "connected-components rounds",
     "dedup_keep_best_quality": "connected-components rounds",
-    "dedup_incremental": "per-batch anti-join rounds",
-    "dedup_minhash_incremental": "per-batch band-join rounds",
     "pagerank_trade_graph": "power-iteration rounds",
-    "triangle_count_trade": "checkpointed lineage",
+    "triangle_count_trade": "pinned lineage",
     "bpe_encode_counts": "per-merge 1-row winner collects",
-    "bpe_pair_counts": "per-merge 1-row winner collects",
-    # the opaque-Python-fn compat tier materializes through RDDs
-    "compat_records_fold": "RDD fold",
     # eager Bloom bitmap build (≤ num_bits/64 rows by construction)
     "bloom_semi_join_revenue": "bounded bitmap collect",
     "bloom_anti_join_revenue": "bounded bitmap collect",
-    # minhash banding pins lineage at lazy localCheckpoints; building
-    # the plan under AQE materializes those checkpoint stages (the
-    # compute is needed exactly once and is reused by every consumer —
-    # deliberate design, dedup/minhash.py band_rows docstring)
-    "dedup_minhash": "AQE stage materialization at banding checkpoints",
-    "leakage_safe_split": "banding checkpoints + component rounds",
-    # r12 optimization: the scored frame is lazily checkpointed so
-    # grouped_ntile's three passes stop re-inlining the bigram-LM
-    # sub-plan (158 -> 26 Exchange); AQE materializes the checkpoint
-    # stages at plan build, same as dedup_minhash above
-    "perplexity_buckets": "AQE stage materialization at LM checkpoint",
+    # minhash banding pins its candidate pairs (session.materialize);
+    # building the plan under AQE runs the shuffle stages beneath the
+    # pin (the compute is needed exactly once and is reused by every
+    # consumer — dedup/minhash.py minhash_candidate_pairs docstring)
+    "dedup_minhash": "AQE stage materialization at the candidate pin",
+    "leakage_safe_split": "candidate pin + component rounds",
+    # r12 optimization: the scored frame is pinned so grouped_ntile's
+    # three passes stop re-inlining the bigram-LM sub-plan (158 -> 26
+    # Exchange); AQE runs the stages beneath the pin at plan build,
+    # same as dedup_minhash above
+    "perplexity_buckets": "AQE stage materialization at the LM pin",
     # scatter-write + in-place compaction + bounded (<=3 row) collect;
     # the scratch dir is removed before return so the result must be
     # materialized inside the body (queries/pipeline.py)
@@ -208,12 +201,15 @@ def test_all_gate_outputs_are_primitive_scalars(spark, sf_dir, registry):
     violations: list[str] = []
     errors: list[str] = []
     stealth_actions: list[str] = []
+    idle_listed = sorted(set(ACTION_RUNNING) - set(registry))
     for name, spec in registry.items():
         budget = ACTION_BUDGET_S if name in ACTION_RUNNING else FAST_BUDGET_S
         try:
             schema, ran_jobs = _derive_schema(spec, spark, sf_dir, budget)
             if ran_jobs and name not in ACTION_RUNNING:
                 stealth_actions.append(name)
+            if not ran_jobs and name in ACTION_RUNNING:
+                idle_listed.append(name)
         except TimeoutError as exc:
             hint = (
                 f"(allowlisted: {ACTION_RUNNING[name]})"
@@ -237,6 +233,11 @@ def test_all_gate_outputs_are_primitive_scalars(spark, sf_dir, registry):
         "ACTION_RUNNING entry (the policy is enforced, not advisory — "
         "either remove the action or list it with a reason): "
         + ", ".join(stealth_actions)
+    )
+    assert not idle_listed, (
+        "ACTION_RUNNING lists queries that are not registered or ran no "
+        "Spark job during schema derivation (the inventory is exact — "
+        "drop the stale entries): " + ", ".join(idle_listed)
     )
     assert not violations, (
         "gate outputs must be primitive scalars (driver harness cannot "

@@ -656,8 +656,9 @@ def test_registry_plan_size_budgets(gate_frames):
     assert not errors, "\n".join(errors)
     assert not offenders, (
         "plan-size budget exceeded — usually a multi-referenced frame "
-        "re-inlining its sub-plan per reference (fix: localCheckpoint "
-        "the scored frame / fold driver-derivable relations, as r12 did "
+        "re-inlining its sub-plan per reference (fix: pin the scored "
+        "frame with session.materialize / fold driver-derivable "
+        "relations, as r12 did "
         "for pipeline_e2e and perplexity_buckets); if the growth is "
         "legitimate, add a PLAN_SIZE_EXCEPTIONS entry with a reason:\n"
         + "\n".join(offenders)
@@ -696,7 +697,7 @@ def test_prod_shape_plan_size_budgets(spark, sf_dir):
 def test_dsir_pipeline_plan_size_budget(spark, sf_dir):
     """The DSIR-mode pipeline after the r13 fold (1471 -> 583
     Exchange) AND the r13 selection checkpoint (583 -> 25 Exchange,
-    7156 -> 608 lines at sf0.001 — the localCheckpoint truncates the
+    7156 -> 608 lines at sf0.001 — the selection pin truncates the
     dsir_logweights lineage Catalyst was re-analyzing per reference).
     Budget pins the post-checkpoint size so neither re-inlining can
     silently return."""
