@@ -35,6 +35,33 @@ CSV parsing is LINE-based, matching the reference's one-record-per-
 line model (/root/reference/shmr/partition.py:126-132): RFC-4180
 quoted fields containing embedded newlines are NOT supported and
 raise ValueError (malformed record).
+Decoding: a task reads each file in chunks of whole lines, at most
+``PACK_BYTES`` of decompressed data each (a single longer line is a
+chunk of its own), and yields one ``pyarrow.RecordBatch`` per chunk:
+
+- pyarrow decodes a chunk (``pyarrow.json.read_json`` with an explicit
+  schema, integers read as int64 and floats as float64, then cast to
+  the schema's types) only when the codec is json, every field is
+  tinyint, smallint, int, bigint, float, double, string or boolean, and
+  the chunk passes a guard: every line starts with ``{`` and ends with
+  ``}`` (so no record spans lines, and pyarrow's row count must equal
+  the line count), the chunk holds no ``Inf`` or ``-NaN`` token
+  (pyarrow takes them, Python's json does not), and no line can reach
+  Python json's nesting or integer-digit limits;
+- every other chunk, and any chunk where pyarrow raises or counts rows
+  other than lines, goes through the row decoder (``json.loads`` and one
+  ``_caster`` per field), and its rows become a batch as Spark converts
+  yielded tuples. So rows and errors are the row decoder's: NaN and
+  ±inf are accepted, a nested value in a string column becomes JSON
+  text, ``"true"`` parses as a boolean, ``1.0`` in an int column
+  becomes 1, a duplicate key's last value wins, a blank line raises;
+- the line-start test also keeps ``null`` records from pyarrow: pyarrow
+  16.1.0's ``read_json`` with an explicit schema segfaults on input
+  whose first record is ``null`` (killing the Python worker), and reads
+  a later ``null`` line as an all-null row where the row decoder
+  raises.
+
+The sink stays row-based: pyarrow has no JSON writer.
 Schema: pass one explicitly for json/csv; defaults are
 ``value string`` (text) and inference-free all-string columns are NOT
 guessed — json without a schema infers from the first file's first
@@ -57,8 +84,10 @@ import glob as globmod
 import gzip
 import json
 import os
+import sys
 from collections.abc import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -162,37 +191,133 @@ def _caster(simple_type: str):
     return cast
 
 
-def _decode_file(
-    path: str, schema: StructType, codec: str, skip_nrows: int
+def _line_chunks(path: str, skip_nrows: int) -> Iterator[bytes]:
+    """The file's lines after the first ``skip_nrows``, decompressed,
+    in chunks of whole lines of at most PACK_BYTES (a single longer
+    line is a chunk of its own), so a task's memory does not grow with
+    file size. Lines split on ``\\n`` alone, as iterating the file
+    does."""
+    with _open_by_ext(path, "rb") as f:
+        for _ in range(skip_nrows):
+            next(f, None)
+        buf = b""
+        while True:
+            want = PACK_BYTES - len(buf)
+            data = f.read(want)
+            buf += data
+            if len(data) < want:  # end of file
+                break
+            cut = buf.rfind(b"\n") + 1
+            if not cut:
+                buf += f.readline()
+                cut = len(buf)
+            yield buf[:cut]
+            buf = buf[cut:]
+        if buf:
+            yield buf
+
+
+def _decode_lines(
+    chunk: bytes, schema: StructType, codec: str, path: str
 ) -> Iterator[tuple]:
-    """Per-file decode loop shared by the batch and stream readers —
-    the reference's line-at-a-time record model under every codec."""
+    """The row decoder: one chunk's lines, one record per line, under
+    every codec."""
     import csv as csvmod
     import io as iomod
 
     names = schema.fieldNames()
     casts = [_caster(f.dataType.simpleString()) for f in schema.fields]
-    with _open_by_ext(path, "rb") as f:
-        for _ in range(skip_nrows):
-            next(f, None)
-        if codec == "json":
-            for line in f:
-                rec = json.loads(line)
-                yield tuple(c(rec.get(n)) for n, c in zip(names, casts))
-        elif codec == "csv":
-            for line in f:
-                row = next(csvmod.reader(iomod.StringIO(line.decode())))
-                if len(row) != len(names):
-                    raise ValueError(
-                        f"malformed CSV record in {path}: "
-                        f"{len(row)} fields, schema has {len(names)}"
-                    )
-                yield tuple(c(v) for v, c in zip(row, casts))
-        elif codec == "text":
-            for line in f:
-                yield (line.decode().rstrip("\r\n"),)
-        else:
-            raise ValueError(f"unknown codec: {codec}")
+    lines = iomod.BytesIO(chunk)
+    if codec == "json":
+        for line in lines:
+            rec = json.loads(line)
+            yield tuple(c(rec.get(n)) for n, c in zip(names, casts))
+    elif codec == "csv":
+        for line in lines:
+            row = next(csvmod.reader(iomod.StringIO(line.decode())))
+            if len(row) != len(names):
+                raise ValueError(
+                    f"malformed CSV record in {path}: "
+                    f"{len(row)} fields, schema has {len(names)}"
+                )
+            yield tuple(c(v) for v, c in zip(row, casts))
+    elif codec == "text":
+        for line in lines:
+            yield (line.decode().rstrip("\r\n"),)
+    else:
+        raise ValueError(f"unknown codec: {codec}")
+
+
+# The flat types ``_caster`` handles that pyarrow's JSON reader decodes
+# alike, each read at the width the row path widens to before Spark's
+# type narrows it.
+_WIDE_READ = {
+    "tinyint": pa.int64(),
+    "smallint": pa.int64(),
+    "int": pa.int64(),
+    "bigint": pa.int64(),
+    "float": pa.float64(),
+    "double": pa.float64(),
+    "string": pa.string(),
+    "boolean": pa.bool_(),
+}
+
+
+# Python's json raises past about 1000 levels of nesting
+# (RecursionError) and on an integer of more digits than
+# sys.get_int_max_str_digits() (ValueError); pyarrow does neither.
+_MAX_NEST = 500
+_DIGIT_MAP = bytes(0x31 if 0x30 <= b <= 0x39 else 0x30 for b in range(256))
+
+
+def _within_json_limits(chunk: bytes, n_lines: int) -> bool:
+    """False if a line of ``chunk`` may reach a limit of Python's json
+    that pyarrow lacks (over-counted: brackets and digits inside
+    strings count too)."""
+    digits = sys.get_int_max_str_digits()
+    if digits and b"1" * (digits + 1) in chunk.translate(_DIGIT_MAP):
+        return False
+    if chunk.count(b"[") + chunk.count(b"{") - n_lines < _MAX_NEST:
+        return True
+    return all(
+        line.count(b"[") + line.count(b"{") < _MAX_NEST for line in chunk.split(b"\n")
+    )
+
+
+def _arrow_json(chunk: bytes, read_schema, target) -> pa.Table | None:
+    """``chunk`` decoded by pyarrow and cast to ``target``, or None
+    where its rows could differ from the row decoder's (the guard is
+    described in the module docstring)."""
+    import pyarrow.json as pajson
+
+    n_nl = chunk.count(b"\n")
+    ends_nl = chunk.endswith(b"\n")
+    n_lines = n_nl + (not ends_nl)
+    if not (
+        # every line is one `{`...`}` object, so no record spans lines
+        chunk.startswith(b"{")
+        and chunk.count(b"\n{") == n_nl - ends_nl
+        and chunk.count(b"}\n") + chunk.count(b"}\r\n") == n_nl
+        and (ends_nl or chunk.endswith((b"}", b"}\r")))
+        # pyarrow also takes Inf and -NaN; json only Infinity and NaN
+        and chunk.count(b"Inf") == chunk.count(b"Infinity")
+        and b"-NaN" not in chunk
+        and _within_json_limits(chunk, n_lines)
+    ):
+        return None
+    try:
+        table = pajson.read_json(
+            pa.py_buffer(chunk),
+            read_options=pajson.ReadOptions(use_threads=False, block_size=len(chunk)),
+            parse_options=pajson.ParseOptions(
+                explicit_schema=read_schema, unexpected_field_behavior="ignore"
+            ),
+        )
+        if table.num_rows != n_lines:
+            return None
+        return table.cast(target)
+    except ValueError:  # ArrowInvalid, a bad UTF-8 message, a failed cast
+        return None
 
 
 class _PartitionFiles:
@@ -205,9 +330,39 @@ class _PartitionFiles:
         self.skip_nrows = int(options.get("skip_nrows", 0))
         self.path = options["path"]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
+        """One ``RecordBatch`` per chunk: pyarrow's decode where the
+        chunk qualifies, else the row decoder's rows converted as Spark
+        converts yielded tuples. Every element is a batch: pyspark looks
+        only at a task's first element to tell tuples from batches."""
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(self.schema_)
+        types = [f.dataType.simpleString() for f in self.schema_.fields]
+        read_schema = None
+        if self.codec == "json" and all(t in _WIDE_READ for t in types):
+            read_schema = pa.schema(
+                [(f.name, _WIDE_READ[t]) for f, t in zip(self.schema_.fields, types)]
+            )
+        # what pyspark's records_to_arrow_batches applies to yielded tuples
+        converts = [
+            LocalDataToArrowConversion._create_converter(f.dataType)
+            for f in self.schema_.fields
+        ]
         for path in partition.paths:
-            yield from _decode_file(path, self.schema_, self.codec, self.skip_nrows)
+            for chunk in _line_chunks(path, self.skip_nrows):
+                table = None
+                if read_schema is not None:
+                    table = _arrow_json(chunk, read_schema, target)
+                if table is not None:
+                    yield from table.to_batches()
+                else:
+                    rows = list(_decode_lines(chunk, self.schema_, self.codec, path))
+                    yield pa.RecordBatch.from_arrays(
+                        [[c(r[i]) for r in rows] for i, c in enumerate(converts)],
+                        schema=target,
+                    )
 
 
 class ShmrReader(_PartitionFiles, DataSourceReader):

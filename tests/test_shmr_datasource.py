@@ -591,3 +591,69 @@ def test_stream_pipeline_checkpoint_restart_exactly_once(registered, tmp_path):
         assert {200, 201, 202} <= got
     finally:
         q.stop()
+
+
+@pytest.mark.parametrize(
+    "text, error",
+    [
+        ('null\n{"a": 1}\n', "AttributeError"),
+        ('null {"a": 1}\n{"a": 2}\n', "JSONDecodeError"),
+        ('{"a": 1}\nnull\n{"a": 2}\n', "AttributeError"),
+        ('{"a": 1}\n\n{"a": 2}\n', "JSONDecodeError"),
+        ('{"a": 1}\n  \t\n', "JSONDecodeError"),
+        ('{"a": 1}{"a": 2}\n', "JSONDecodeError"),
+    ],
+    ids=["leading-null", "leading-null-line", "mid-null", "blank", "whitespace", "two-objects"],
+)
+def test_malformed_json_raises_in_task_and_worker_survives(registered, tmp_path, text, error):
+    """Each of these fails the task with the row decoder's error; none
+    reaches pyarrow's JSON reader, which segfaults on a leading
+    ``null`` record and reads a later one as an all-null row."""
+    spark = registered
+    bad = tmp_path / "bad.json"
+    bad.write_text(text)
+    with pytest.raises(Exception) as info:
+        spark.read.format("shmr").schema("a bigint").load(str(bad)).collect()
+    assert error in str(info.value)
+    assert "crashed" not in str(info.value)
+    good = tmp_path / "good.json"
+    good.write_text('{"a": 1}\n{"a": 2}\n')
+    df = spark.read.format("shmr").schema("a bigint").load(str(good))
+    assert sorted(r.a for r in df.collect()) == [1, 2]
+
+
+def test_stream_reads_the_rows_the_batch_reader_reads(registered, tmp_path):
+    """Both readers share the decode: chunks pyarrow decodes, a chunk
+    the row decoder takes (a nested value and a boolean in a string
+    column, a duplicate key, NaN and Infinity), and a gzip file."""
+    import gzip
+
+    spark = registered
+    d = tmp_path / "both"
+    d.mkdir()
+    _write_lines(d / "part-00000.json", [{"k": i, "v": i / 4, "s": f"r{i}"} for i in range(40)])
+    with open(d / "part-00001.json", "w") as f:
+        f.write('{"k": 100, "v": NaN, "s": {"nested": [1, 2]}}\n')
+        f.write('{"k": 101, "k": 102, "v": Infinity, "s": true}\n')
+    with gzip.open(d / "part-00002.json.gz", "wt") as f:
+        for i in range(200, 230):
+            f.write(json.dumps({"k": i, "s": "é" * (i % 3)}) + "\n")
+    schema = "k bigint, v double, s string"
+    batch = spark.read.format("shmr").schema(schema).load(str(d)).collect()
+    q = (
+        spark.readStream.format("shmr")
+        .schema(schema)
+        .load(str(d))
+        .writeStream.format("memory")
+        .queryName("shmr_stream_vs_batch")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(60)
+        assert q.exception() is None
+        streamed = spark.sql("SELECT * FROM shmr_stream_vs_batch").collect()
+    finally:
+        q.stop()
+    assert len(batch) == 72
+    assert sorted(map(repr, streamed)) == sorted(map(repr, batch))
